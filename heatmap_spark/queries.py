@@ -14,22 +14,28 @@ views over the same parquet files the Spark side reads.
 Rows-only queries (``err: "no_oracle"`` in CORRECTNESS_r{N}.json): the
 driver writes that string for every declared query WITHOUT an
 ``oracle_sql()`` entry — it is the intended encoding for
-"rows-only-by-design", NOT a failure.  Exactly 19 entries are declared
+"rows-only-by-design", NOT a failure.  The entries below are declared
 rows-only, each because its output is an approximation or a
 model-dependent artifact no ANSI-SQL oracle can reproduce, and each
-carries an IN-REGISTRY quality pin that raises on regression so the
-driver still turns red: q_approx_distinct, q_approx_quantiles,
-q_hll_sketches, q_kll_quantiles (sketch error pins);
-q_knn_cosine_ivf, q_knn_ivf_recall, q_knn_pq_recall, q_knn_opq_recall,
-q_knn_ivfpq_recall, q_knn_ivfpq_opq_recall, q_knn_graph_recall,
-q_ml_brp_neighbors, q_streaming_ann_index,
-q_streaming_graph_ann (ANN recall pins vs the exact top-k);
-q_ml_minhash_lsh (probabilistic LSH pair-recall pin);
-q_bpe_merges, q_bpe_token_counts, q_unigram_vocab (pytest-side
-exact-match oracle vs a pure-Python trainer; iterative EM/merge loops
-are the SQL-inexpressible class);
-q_media_features (decoded-pixel feature stats pinned against the
-codec's own hypothesis round-trip suite).
+carries an IN-REGISTRY quality pin that raises on regression
+(tests/test_oracle.py checks this list against the registry):
+
+* q_approx_distinct, q_approx_quantiles, q_hll_sketches,
+  q_kll_quantiles, q_streaming_kll_drift,
+  q_streaming_binning_timeline (sketch error pins; the KLL store's
+  sketch binaries are randomized);
+* q_knn_cosine_ivf, q_knn_ivf_recall, q_knn_pq_recall,
+  q_knn_opq_recall, q_knn_ivfpq_recall, q_knn_ivfpq_opq_recall,
+  q_knn_graph_recall, q_ml_brp_neighbors, q_streaming_ann_index,
+  q_streaming_ann_opq, q_streaming_graph_ann (ANN recall pins vs the
+  exact top-k);
+* q_ml_minhash_lsh (probabilistic LSH pair-recall pin);
+* q_bpe_merges, q_bpe_token_counts, q_unigram_vocab (pytest-side
+  exact-match oracle vs a pure-Python trainer; iterative EM/merge loops
+  are the SQL-inexpressible class);
+* q_media_features (decoded-pixel feature stats pinned against the
+  codec's own hypothesis round-trip suite).
+
 The portable sketch family (q_hll_portable, q_streaming_hll,
 q_kmv_overlap, q_knn_binary) is deliberately NOT in this list — those
 estimators are deterministic md5/integer constructions, so their

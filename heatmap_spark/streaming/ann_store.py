@@ -11,9 +11,9 @@ repo's store protocol:
   written with the first batch (parquet, so any session can reload it).
 * ``codes/batch=<id>``           — the batch's (vec_id, bucket, codes)
   rows — m bytes + a bucket id per vector, the only per-batch write.
-* ``codes_base/v=<n>``           — LSM compaction target, repartitioned
-  by ``bucket`` so probed-list reads prune at directory level (the
-  crawl-store postings pattern); folded-batch marker, crash-safe GC.
+* ``codes_base/v=<n>``           — LSM compaction target, written
+  clustered by ``bucket`` (the crawl-store postings pattern);
+  folded-batch marker, crash-safe GC.
 * ``_LATEST``                    — marker-committed exactly-once, same
   replay semantics as every store in this package.
 
@@ -57,16 +57,17 @@ from heatmap_spark.operators.similarity import (
     pq_encode_np,
     rotate_vectors,
 )
-from heatmap_spark.streaming.passages import (
-    _batch_id,
+from heatmap_spark.streaming.logstore import (
+    LogStore,
     _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
+    _Fs,
+    _join,
 )
-from heatmap_spark.streaming.tile_store import _Fs, _join
 
-_LATEST = "_LATEST"
-
+# vectors arrive exactly once, so codes fold by plain concatenation;
+# compaction writes the base clustered by ``bucket`` (the crawl-store
+# postings pattern), reads stay a plain union
+_CODES = LogStore("codes", layout=("bucket",))
 
 _MODEL_READY = "_MODEL_READY"
 
@@ -90,7 +91,7 @@ def _write_model(spark, store_path, coarse, cb, dim, R=None):
     # Commit marker LAST: model reuse is gated on this file, not on the
     # parquet dirs existing — a crash between the two writes above
     # leaves a partial model that replay must retrain over, preserving
-    # the replay-is-a-no-op contract the codes/records get via _LATEST.
+    # the replay-is-a-no-op contract the codes get via the store marker.
     _Fs(spark).write_text_atomic(
         _join(store_path, "model", _MODEL_READY), "ready"
     )
@@ -163,93 +164,48 @@ def merge_batch_into_ann_store(
     batches rotate-then-encode — still per-row deterministic, so the
     streamed store stays bit-identical to the one-shot build.
     Returns False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    if not fs.exists(_join(store_path, "model", _MODEL_READY)):
-        nv = batch_emb.select(
-            "vec_id", _l2_normalize(F.col("vec")).alias("vec")
-        )
-        coarse = ivf_codebook(nv, n_buckets, train_iters)
-        cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
-        resid = _assign_to_codebook(nv, coarse).select(
-            "vec_id",
-            F.zip_with(
-                "vec", F.element_at(cents, F.col("bucket") + 1), lambda a, b: a - b
-            ).alias("vec"),
-        )
-        if opq:
-            R, cb = opq_train(
-                resid, m, k, dim, opq_iters, train_iters, normalize=False
+
+    def write(dest):
+        if not _Fs(spark).exists(_join(store_path, "model", _MODEL_READY)):
+            nv = batch_emb.select(
+                "vec_id", _l2_normalize(F.col("vec")).alias("vec")
             )
-        else:
-            R = None
-            cb = pq_codebooks(resid, m, k, dim, train_iters, normalize=False)
-        _write_model(spark, store_path, coarse, cb, dim, R=R)
-    coarse, cb = load_ann_model(spark, store_path)
-    R = load_ann_rotation(spark, store_path)
-    codes = _encode_batch(batch_emb, coarse, cb, m, k, dim, R=R)
-    codes.write.mode("overwrite").parquet(
-        _join(store_path, "codes", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+            coarse = ivf_codebook(nv, n_buckets, train_iters)
+            cents = lit_double_arrays([coarse[b] for b in sorted(coarse)])
+            resid = _assign_to_codebook(nv, coarse).select(
+                "vec_id",
+                F.zip_with(
+                    "vec",
+                    F.element_at(cents, F.col("bucket") + 1),
+                    lambda a, b: a - b,
+                ).alias("vec"),
+            )
+            if opq:
+                R, cb = opq_train(
+                    resid, m, k, dim, opq_iters, train_iters, normalize=False
+                )
+            else:
+                R = None
+                cb = pq_codebooks(resid, m, k, dim, train_iters, normalize=False)
+            _write_model(spark, store_path, coarse, cb, dim, R=R)
+        coarse, cb = load_ann_model(spark, store_path)
+        R = load_ann_rotation(spark, store_path)
+        _encode_batch(batch_emb, coarse, cb, m, k, dim, R=R).write.mode(
+            "overwrite"
+        ).parquet(dest("codes"))
 
-
-def _codes_base(spark, store_path):
-    fs = _Fs()
-    marker = _join(store_path, "codes_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "codes_base", f"v={ver}")),
-        ver,
-        folded,
-    )
+    return _CODES.commit(spark, store_path, batch_id, write)
 
 
 def read_ann_codes(spark: SparkSession, store_path: str) -> DataFrame | None:
     """Every committed code row: compacted base + partials since."""
-    base, _, folded = _codes_base(spark, store_path)
-    dirs = _committed_batches(store_path, "codes", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _CODES.accumulated(spark, store_path)
 
 
 def compact_ann_store(spark: SparkSession, store_path: str) -> int:
-    """Fold committed code partials into a bucket-repartitioned base
-    (probed-list reads then prune at directory level); folded-batch
-    marker + pure-GC deletes — the crash-safe protocol."""
-    fs = _Fs(spark)
-    base, ver, folded = _codes_base(spark, store_path)
-    dirs = _committed_batches(store_path, "codes", min_batch=folded)
-    if not dirs:
-        for p in _committed_batches(store_path, "codes"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in dirs)
-    allp = spark.read.parquet(*dirs)
-    if base is not None:
-        allp = allp.unionByName(base)
-    allp.repartition("bucket").write.mode("overwrite").parquet(
-        _join(store_path, "codes_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "codes_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    for p in _committed_batches(store_path, "codes"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-    return len(dirs)
+    """Fold committed code partials into a bucket-clustered base.
+    Returns the number of partials folded."""
+    return _CODES.compact(spark, store_path)
 
 
 #: served-recall floor below which the drift monitor flags a retrain —

@@ -20,8 +20,9 @@ row is appended to an immutable log:
   pooled) — integer sums until the two final divisions, so the whole
   log is value-hash oracle-checkable.
 
-Exactly-once: the ``_LATEST`` marker protocol shared with the
-passage/crawl/vocab stores — replay of a committed batch is a no-op.
+Exactly-once: the ``_LATEST`` marker protocol of logstore.py, shared
+with the passage/crawl/vocab stores — replay of a committed batch is a
+no-op.
 No compaction is needed: the log is one row per batch and the prior
 state (two integer sums) is recovered from the log itself.
 
@@ -49,10 +50,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heatmap_spark.streaming.passages import _committed_batches, _read_last_batch
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
+from heatmap_spark.streaming.logstore import (
+    _committed_batches,
+    commit_batch,
+    foreach_batch,
+)
 
 # The frozen tokenizer artifact: a rank-ordered BPE merge list over
 # lowercased alnum words + the </w> end-of-word sentinel (Sennrich et
@@ -154,48 +156,37 @@ def merge_batch_into_bpe_store(
     the frozen merges, append the batch's metrics row (drift computed
     against all PRIOR batches pooled), commit the marker.  Returns
     False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    pw, pt = _prior_totals(spark, store_path)
-    agg = bpe_doc_metrics(batch_docs).agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("n_words").cast("bigint").alias("n_words"),
-        F.sum("n_chars").cast("bigint").alias("n_chars"),
-        F.sum("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
-        F.sum("n_frag_words").cast("bigint").alias("n_frag_words"),
-    ).first()
-    nd = int(agg["n_docs"] or 0)
-    nw = int(agg["n_words"] or 0)
-    nc = int(agg["n_chars"] or 0)
-    nt = int(agg["n_bpe_tokens"] or 0)
-    nf = int(agg["n_frag_words"] or 0)
-    fert = round(nt / nw, 6) if nw else 0.0
-    drift = round(nt / nw - pt / pw, 6) if nw and pw else 0.0
-    spark.createDataFrame(
-        [(batch_id, nd, nw, nc, nt, nf, fert, drift)], METRICS_SCHEMA
-    ).write.mode("overwrite").parquet(
-        _join(store_path, "metrics", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+
+    def write(dest):
+        pw, pt = _prior_totals(spark, store_path)
+        agg = bpe_doc_metrics(batch_docs).agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("n_words").cast("bigint").alias("n_words"),
+            F.sum("n_chars").cast("bigint").alias("n_chars"),
+            F.sum("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
+            F.sum("n_frag_words").cast("bigint").alias("n_frag_words"),
+        ).first()
+        nd = int(agg["n_docs"] or 0)
+        nw = int(agg["n_words"] or 0)
+        nc = int(agg["n_chars"] or 0)
+        nt = int(agg["n_bpe_tokens"] or 0)
+        nf = int(agg["n_frag_words"] or 0)
+        fert = round(nt / nw, 6) if nw else 0.0
+        drift = round(nt / nw - pt / pw, 6) if nw and pw else 0.0
+        spark.createDataFrame(
+            [(batch_id, nd, nw, nc, nt, nf, fert, drift)], METRICS_SCHEMA
+        ).write.mode("overwrite").parquet(dest("metrics"))
+
+    return commit_batch(spark, store_path, batch_id, write)
 
 
 def stream_bpe_drift(docs_stream: DataFrame, store_path: str, checkpoint_path: str):
     """Maintain the BPE-drift store from a (doc_id, text) stream via
     foreachBatch (availableNow trigger)."""
-    spark = docs_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_bpe_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return foreach_batch(
+        docs_stream,
+        checkpoint_path,
+        lambda spark, df, b: merge_batch_into_bpe_store(spark, df, store_path, b),
     )
 
 

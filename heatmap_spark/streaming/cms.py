@@ -5,9 +5,10 @@ textbook incremental frequency summary: each micro-batch contributes a
 fixed-size (depth × width) partial, and the accumulated sketch is the
 cellwise sum of base + partials — O(cells) per batch regardless of
 batch or corpus size.  This store instantiates the repo's shared
-log-structured protocol (passages.py: per-batch dirs, `_LATEST`
-marker committed last so replays are no-ops, LSM compaction with a
-folded-batch marker making partial deletes pure GC) for the sketch:
+log-structured protocol (streaming/logstore.py: per-batch dirs,
+`_LATEST` marker committed last so replays are no-ops, LSM compaction
+with a folded-batch marker making partial deletes pure GC) for the
+sketch:
 
 * ``cells/batch=<id>``  — the batch's (j, col, cnt) grid.
 * ``cells_base/v=<n>``  — compaction target.
@@ -26,46 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.profiling import cms_cells
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
+from heatmap_spark.streaming.logstore import LogStore
+
+_CELLS = LogStore(
+    "cells",
+    lambda df: df.groupBy("j", "col").agg(F.sum("cnt").cast("bigint").alias("cnt")),
 )
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
-
-
-def _cells_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "cells_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "cells_base", f"v={ver}")),
-        ver,
-        folded,
-    )
 
 
 def accumulated_sketch(spark: SparkSession, store_path: str) -> DataFrame | None:
     """(j, col, cnt) summed over compacted base + partials since its
     fold — the cellwise-merge identity."""
-    base, _, folded = _cells_base(spark, store_path)
-    dirs = _committed_batches(store_path, "cells", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return allp.groupBy("j", "col").agg(F.sum("cnt").cast("bigint").alias("cnt"))
+    return _CELLS.accumulated(spark, store_path)
 
 
 def merge_batch_into_cms_store(
@@ -75,65 +48,16 @@ def merge_batch_into_cms_store(
     """Ingest one (doc_id, text) micro-batch: write its fixed-size cell
     grid, then commit the marker.  Returns False (no-op) on replay of
     a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
     from heatmap_spark.operators.textops import _all_tokens
 
     tok = batch_docs.select(F.explode(_all_tokens()).alias("token"))
-    cms_cells(tok, depth, width).write.mode("overwrite").parquet(
-        _join(store_path, "cells", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
-
-
-def stream_cms(docs_stream: DataFrame, store_path: str, checkpoint_path: str):
-    """Maintain the sketch store from a (doc_id, text) stream via
-    foreachBatch (availableNow trigger)."""
-    spark = docs_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_cms_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _CELLS.commit(spark, store_path, batch_id, cms_cells(tok, depth, width))
 
 
 def compact_cms_store(spark: SparkSession, store_path: str) -> int:
     """LSM compaction: fold committed cell partials into a new base
-    (cellwise sum), folded-batch marker + pure-GC deletes."""
-    fs = _Fs(spark)
-    base, ver, folded = _cells_base(spark, store_path)
-    partials = _committed_batches(store_path, "cells", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "cells"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = allp.groupBy("j", "col").agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "cells_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "cells_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "cells"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
+    (cellwise sum).  Returns the number of partials folded."""
+    return _CELLS.compact(spark, store_path)
 
 
 def estimate_heavy_hitters(

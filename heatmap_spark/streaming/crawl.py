@@ -13,7 +13,7 @@ history:
   relation candidate generation uses.
 * ``postings_base/v=<n>`` — LSM compaction target:
   :func:`compact_crawl_store` folds the per-batch postings partials
-  into a base version (marker-committed, repartitioned by the join
+  into a base version (marker-committed, clustered by the join
   key), so membership joins read one base + recent partials
   regardless of crawl age.
 * ``flags/batch=<id>`` — (doc_id, batch, status) decided AT INGEST:
@@ -28,7 +28,7 @@ stored side is bucketed by band_sig prefix so the join shuffles only
 the batch side — and one self-join within the batch.  Nothing
 re-scans or re-signs history.
 
-Exactly-once: same marker protocol as the passage store (overwrite
+Exactly-once: the shared marker protocol of logstore.py (overwrite
 per-batch dirs keyed by batch id; ``_LATEST`` committed last; replays
 of committed batches skipped; readers trust only dirs ≤ the marker).
 
@@ -45,86 +45,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.dedup import lsh_band_postings
-from heatmap_spark.streaming.passages import (
-    _batch_id,
+from heatmap_spark.streaming.logstore import (
+    LogStore,
     _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
+    foreach_batch,
 )
-from heatmap_spark.streaming.tile_store import _Fs, _join
 
-_LATEST = "_LATEST"
-
-
-def _postings_base(spark: SparkSession, store_path: str):
-    """(compacted postings base DataFrame | None, version, max folded
-    batch id)."""
-    fs = _Fs()
-    marker = _join(store_path, "postings_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "postings_base", f"v={ver}")),
-        ver,
-        folded,
-    )
-
-
-def _stored_postings(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """Every committed posting: compacted base (if any) + the per-batch
-    partials written since its fold (partials already folded into the
-    base are skipped by batch id, so un-GC'd stragglers from a crashed
-    compaction are never read twice)."""
-    base, _, folded = _postings_base(spark, store_path)
-    dirs = _committed_batches(store_path, "postings", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+# docs arrive exactly once, so postings fold by plain concatenation;
+# compaction writes the base clustered by the join key (each file holds
+# a disjoint set of buckets), reads stay a plain union
+_POSTINGS = LogStore("postings", layout=("band", "band_sig"))
 
 
 def compact_crawl_store(spark: SparkSession, store_path: str) -> int:
     """LSM compaction: fold every committed per-batch postings dir into
-    a new postings base version (marker-committed), then delete the
-    folded dirs — membership joins read ONE base + recent partials
-    regardless of crawl age (docs arrive exactly once, so the fold is
-    a plain rewrite, no aggregation).  Returns the number of partials
-    folded.  Safe against a concurrent WRITER: a partial written after
-    the listing survives for the next compaction; flags are untouched
-    (they are the immutable log)."""
-    fs = _Fs(spark)
-    base, ver, folded = _postings_base(spark, store_path)
-    dirs = _committed_batches(store_path, "postings", min_batch=folded)
-    if not dirs:
-        # GC stragglers a prior crashed compaction left behind
-        for p in _committed_batches(store_path, "postings"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in dirs)
-    allp = spark.read.parquet(*dirs)
-    if base is not None:
-        allp = allp.unionByName(base)
-    # repartition by the join key so the bucket-membership join against
-    # future batches shuffles only the batch side
-    allp.repartition("band", "band_sig").write.mode("overwrite").parquet(
-        _join(store_path, "postings_base", f"v={ver + 1}")
-    )
-    # marker carries the max folded batch id: readers skip ≤-folded
-    # partials, so the deletes below are pure GC (crash-safe)
-    fs.write_text_atomic(
-        _join(store_path, "postings_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    for p in _committed_batches(store_path, "postings"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-    return len(dirs)
+    a new postings base version — membership joins read ONE base +
+    recent partials regardless of crawl age.  Returns the number of
+    partials folded.  Flags are untouched (they are the immutable
+    log)."""
+    return _POSTINGS.compact(spark, store_path)
 
 
 def merge_batch_into_lsh_store(
@@ -133,57 +72,47 @@ def merge_batch_into_lsh_store(
     """Ingest one batch of (doc_id, text) rows: write its postings and
     its ingest-time flags, then commit the marker.  Returns False
     (no-op) when ``batch_id`` was already committed."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    postings = lsh_band_postings(batch_docs)
-    postings.write.mode("overwrite").parquet(
-        _join(store_path, "postings", f"batch={batch_id}")
-    )
-    written = spark.read.parquet(
-        _join(store_path, "postings", f"batch={batch_id}")
-    )
-    prior = _stored_postings(spark, store_path)
-    if prior is not None:
-        vs_corpus = (
-            written.join(prior, ["band", "band_sig"])
-            .select(written["doc_id"])
+
+    def write(dest):
+        lsh_band_postings(batch_docs).write.mode("overwrite").parquet(
+            dest("postings")
+        )
+        written = spark.read.parquet(dest("postings"))
+        prior = _POSTINGS.accumulated(spark, store_path)
+        if prior is not None:
+            vs_corpus = (
+                written.join(prior, ["band", "band_sig"])
+                .select(written["doc_id"])
+                .distinct()
+                .withColumn("dup_corpus", F.lit(1))
+            )
+        else:
+            vs_corpus = spark.createDataFrame([], "doc_id long, dup_corpus int")
+        a = written.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
+        b = written.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
+        in_batch = (
+            a.join(b, ["band", "band_sig"])
+            .where(F.col("doc_a") < F.col("doc_b"))
+            .select(F.col("doc_b").alias("doc_id"))
             .distinct()
-            .withColumn("dup_corpus", F.lit(1))
+            .withColumn("dup_batch", F.lit(1))
         )
-    else:
-        vs_corpus = spark.createDataFrame([], "doc_id long, dup_corpus int")
-    a = written.select(
-        F.col("doc_id").alias("doc_a"), "band", "band_sig"
-    )
-    b = written.select(
-        F.col("doc_id").alias("doc_b"), "band", "band_sig"
-    )
-    in_batch = (
-        a.join(b, ["band", "band_sig"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-        .withColumn("dup_batch", F.lit(1))
-    )
-    flags = (
-        batch_docs.select("doc_id")
-        .join(vs_corpus, "doc_id", "left")
-        .join(in_batch, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.lit(batch_id).alias("batch"),
-            F.when(F.col("dup_corpus") == 1, F.lit("dup_of_corpus"))
-            .when(F.col("dup_batch") == 1, F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("status"),
+        flags = (
+            batch_docs.select("doc_id")
+            .join(vs_corpus, "doc_id", "left")
+            .join(in_batch, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.lit(batch_id).alias("batch"),
+                F.when(F.col("dup_corpus") == 1, F.lit("dup_of_corpus"))
+                .when(F.col("dup_batch") == 1, F.lit("dup_in_batch"))
+                .otherwise(F.lit("new"))
+                .alias("status"),
+            )
         )
-    )
-    flags.write.mode("overwrite").parquet(
-        _join(store_path, "flags", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+        flags.write.mode("overwrite").parquet(dest("flags"))
+
+    return _POSTINGS.commit(spark, store_path, batch_id, write)
 
 
 def stream_lsh_dedup(
@@ -193,18 +122,10 @@ def stream_lsh_dedup(
     foreachBatch (availableNow trigger — call ``.awaitTermination()``).
     Batch arrival order IS the corpus order — the stream's batch ids
     define "earlier"."""
-    spark = docs_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_lsh_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return foreach_batch(
+        docs_stream,
+        checkpoint_path,
+        lambda spark, df, b: merge_batch_into_lsh_store(spark, df, store_path, b),
     )
 
 

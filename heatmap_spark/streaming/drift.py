@@ -13,7 +13,7 @@ queries (queries.py q_streaming_drift_ks / _mwu) share the batch
 queries' DuckDB oracles verbatim, so the driver value-hash certifies
 incremental maintenance of an exact order statistic.
 
-Store layout on the shared log-structured protocol (passages.py):
+Store layout on the shared log-structured protocol (logstore.py):
 
 * ``vals/batch=<id>``  — the batch's (event_type, value, da, db)
   partial, one row per distinct (type, value) IN THE BATCH.
@@ -42,36 +42,15 @@ from heatmap_spark.operators.profiling import (
     mwu_from_value_table,
     w1_from_value_table,
 )
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
-)
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
+from heatmap_spark.streaming.logstore import LogStore
 
 
-def _sum_fold(df: DataFrame) -> DataFrame:
-    return df.groupBy("event_type", "value").agg(
+_VALS = LogStore(
+    "vals",
+    lambda df: df.groupBy("event_type", "value").agg(
         F.sum("da").alias("da"), F.sum("db").alias("db")
-    )
-
-
-def _vals_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "vals_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "vals_base", f"v={ver}")),
-        ver,
-        folded,
-    )
+    ),
+)
 
 
 def merge_batch_into_drift_store(
@@ -85,18 +64,11 @@ def merge_batch_into_drift_store(
     the stream-half label (1 = reference window) — the caller owns the
     split policy, the store only maintains the counts.  Returns False
     (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
     partial = labeled_batch.groupBy("event_type", "value").agg(
         F.sum("is_a").alias("da"),
         F.sum(F.lit(1) - F.col("is_a")).alias("db"),
     )
-    partial.write.mode("overwrite").parquet(
-        _join(store_path, "vals", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+    return _VALS.commit(spark, store_path, batch_id, partial)
 
 
 def accumulated_value_table(
@@ -105,66 +77,13 @@ def accumulated_value_table(
     """(event_type, value, da, db) sum-merged over compacted base +
     partials since its fold — equal to drift_value_table over the full
     ingested history by the sum-merge identity."""
-    base, _, folded = _vals_base(spark, store_path)
-    dirs = _committed_batches(store_path, "vals", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return _sum_fold(allp)
-
-
-def stream_drift(labeled_stream: DataFrame, store_path: str, checkpoint_path: str):
-    """Maintain the value-table store from a labeled
-    (event_type, is_a, value) stream via foreachBatch (availableNow
-    trigger)."""
-    spark = labeled_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_drift_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        labeled_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _VALS.accumulated(spark, store_path)
 
 
 def compact_drift_store(spark: SparkSession, store_path: str) -> int:
-    """LSM compaction: sum-fold committed partials into a new base,
-    folded-batch marker + pure-GC deletes."""
-    fs = _Fs(spark)
-    base, ver, folded = _vals_base(spark, store_path)
-    partials = _committed_batches(store_path, "vals", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "vals"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = _sum_fold(allp)
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "vals_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "vals_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "vals"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
+    """LSM compaction: sum-fold committed partials into a new base.
+    Returns the number of partials folded."""
+    return _VALS.compact(spark, store_path)
 
 
 def _acc_or_raise(spark: SparkSession, store_path: str) -> DataFrame:

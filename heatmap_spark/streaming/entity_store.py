@@ -10,16 +10,15 @@ assignment (connected components over the union) is IDENTICAL to
 :func:`heatmap_spark.operators.entity.entity_resolution`, and the SAME
 DuckDB oracle gates both.
 
-Store layout (the shared protocol of streaming/passages.py):
+Store layout (the shared protocol of streaming/logstore.py):
 
 * ``records/batch=<id>`` — the batch's records (append-only log).
 * ``edges/batch=<id>``   — match edges discovered AT INGEST: batch-
   internal pairs plus batch-vs-history pairs (the batch side probes
   bands {b-1, b, b+1}, so banding stays lossless in the asymmetric
   join; only the batch replicates ×3, never the history).
-* ``records_base/v=<n>`` — LSM compaction target, repartitioned by the
-  block key so the per-batch history join shuffles only the batch
-  side; folded-batch marker, crash-safe GC.
+* ``records_base/v=<n>`` — LSM compaction target, written clustered
+  by the block key; folded-batch marker, crash-safe GC.
 * ``_LATEST``            — marker-committed exactly-once; replays of
   committed batches are no-ops.
 
@@ -34,15 +33,12 @@ from pyspark.sql import functions as F
 
 from heatmap_spark.operators.dedup import connected_components
 from heatmap_spark.operators.entity import er_candidate_pairs
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
-)
-from heatmap_spark.streaming.tile_store import _Fs, _join
+from heatmap_spark.streaming.logstore import LogStore, _committed_batches
 
-_LATEST = "_LATEST"
+# records arrive exactly once, so they fold by plain concatenation;
+# compaction writes the base clustered by the block key, reads stay a
+# plain union
+_RECORDS = LogStore("records", layout=("nation", "segment"))
 
 _REC_SCHEMA = (
     "rec_id bigint, name string, nation int, segment string, "
@@ -50,31 +46,8 @@ _REC_SCHEMA = (
 )
 
 
-def _records_base(spark, store_path):
-    fs = _Fs()
-    marker = _join(store_path, "records_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "records_base", f"v={ver}")),
-        ver,
-        folded,
-    )
-
-
 def accumulated_records(spark: SparkSession, store_path: str) -> DataFrame | None:
-    base, _, folded = _records_base(spark, store_path)
-    dirs = _committed_batches(store_path, "records", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _RECORDS.accumulated(spark, store_path)
 
 
 def _cross_batch_pairs(
@@ -139,30 +112,25 @@ def merge_batch_into_entity_store(
     """Ingest one batch of records: append the batch, discover its
     match edges (internal + vs history), commit the marker.  Returns
     False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    hist = accumulated_records(spark, store_path)
-    batch_records.select(
-        "rec_id", "name", "nation", "segment", "bal", "source"
-    ).write.mode("overwrite").parquet(
-        _join(store_path, "records", f"batch={batch_id}")
-    )
-    written = spark.read.parquet(_join(store_path, "records", f"batch={batch_id}"))
-    edges = er_candidate_pairs(
-        written, band_width, max_name_dist, max_bal_diff
-    )
-    if hist is not None:
-        edges = edges.unionByName(
-            _cross_batch_pairs(
-                written, hist, band_width, max_name_dist, max_bal_diff
-            )
-        ).distinct()
-    edges.write.mode("overwrite").parquet(
-        _join(store_path, "edges", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+
+    def write(dest):
+        hist = accumulated_records(spark, store_path)
+        batch_records.select(
+            "rec_id", "name", "nation", "segment", "bal", "source"
+        ).write.mode("overwrite").parquet(dest("records"))
+        written = spark.read.parquet(dest("records"))
+        edges = er_candidate_pairs(
+            written, band_width, max_name_dist, max_bal_diff
+        )
+        if hist is not None:
+            edges = edges.unionByName(
+                _cross_batch_pairs(
+                    written, hist, band_width, max_name_dist, max_bal_diff
+                )
+            ).distinct()
+        edges.write.mode("overwrite").parquet(dest("edges"))
+
+    return _RECORDS.commit(spark, store_path, batch_id, write)
 
 
 def read_entity_assignments(spark: SparkSession, store_path: str) -> DataFrame:
@@ -202,28 +170,7 @@ def read_entity_assignments(spark: SparkSession, store_path: str) -> DataFrame:
 
 
 def compact_entity_store(spark: SparkSession, store_path: str) -> int:
-    """Fold committed record partials into a block-key-repartitioned
-    base; folded-batch marker + pure-GC deletes (the crash-safe
-    protocol).  Edges are an immutable log and are never folded."""
-    fs = _Fs(spark)
-    base, ver, folded = _records_base(spark, store_path)
-    dirs = _committed_batches(store_path, "records", min_batch=folded)
-    if not dirs:
-        for p in _committed_batches(store_path, "records"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in dirs)
-    allp = spark.read.parquet(*dirs)
-    if base is not None:
-        allp = allp.unionByName(base)
-    allp.repartition("nation", "segment").write.mode("overwrite").parquet(
-        _join(store_path, "records_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "records_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    for p in _committed_batches(store_path, "records"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-    return len(dirs)
+    """Fold committed record partials into a block-key-clustered
+    base.  Returns the number of partials folded.  Edges are an
+    immutable log and are never folded."""
+    return _RECORDS.compact(spark, store_path)

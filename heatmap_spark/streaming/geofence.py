@@ -1,7 +1,7 @@
 """Streaming geofence store: incremental per-fence visit counts with
 distinct visitors.
 
-Another instance of the shared log-structured protocol (passages.py),
+Another instance of the shared log-structured protocol (logstore.py),
 chosen to show the grain trick for DISTINCT aggregates: per-fence
 visit counts are sum-mergeable, but distinct visitors are not — so the
 per-batch partial is kept at the (fence, user_id) grain (one row per
@@ -28,15 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.geo import GEOFENCES, point_in_polygon
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
-)
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
+from heatmap_spark.streaming.logstore import LogStore
 
 
 def _classify(batch_locations: DataFrame) -> DataFrame:
@@ -58,35 +50,12 @@ def _classify(batch_locations: DataFrame) -> DataFrame:
     )
 
 
-def _hits_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "hits_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "hits_base", f"v={ver}")),
-        ver,
-        folded,
-    )
-
-
-def _accumulated_hits(spark: SparkSession, store_path: str) -> DataFrame | None:
-    base, _, folded = _hits_base(spark, store_path)
-    dirs = _committed_batches(store_path, "hits", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return allp.groupBy("fence", "user_id").agg(
+_HITS = LogStore(
+    "hits",
+    lambda df: df.groupBy("fence", "user_id").agg(
         F.sum("n_points").alias("n_points")
-    )
+    ),
+)
 
 
 def merge_batch_into_geofence_store(
@@ -98,46 +67,13 @@ def merge_batch_into_geofence_store(
     """Ingest one locations micro-batch: classify, aggregate to the
     (fence, user_id) grain, write the partial, commit the marker.
     Returns False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    _classify(batch_locations).write.mode("overwrite").parquet(
-        _join(store_path, "hits", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+    return _HITS.commit(spark, store_path, batch_id, _classify(batch_locations))
 
 
 def compact_geofence_store(spark: SparkSession, store_path: str) -> int:
     """LSM compaction: fold committed hit partials into a new base
-    (grain-preserving sum), folded-batch marker + pure-GC deletes."""
-    fs = _Fs(spark)
-    base, ver, folded = _hits_base(spark, store_path)
-    partials = _committed_batches(store_path, "hits", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "hits"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = allp.groupBy("fence", "user_id").agg(
-        F.sum("n_points").alias("n_points")
-    )
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "hits_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "hits_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "hits"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
+    (grain-preserving sum).  Returns the number of partials folded."""
+    return _HITS.compact(spark, store_path)
 
 
 def read_geofence_counts(spark: SparkSession, store_path: str) -> DataFrame:
@@ -147,7 +83,7 @@ def read_geofence_counts(spark: SparkSession, store_path: str) -> DataFrame:
     fences = spark.createDataFrame(
         [(name,) for name, _ in GEOFENCES], "fence string"
     )
-    hits = _accumulated_hits(spark, store_path)
+    hits = _HITS.accumulated(spark, store_path)
     if hits is None:
         return fences.select(
             "fence",

@@ -36,6 +36,8 @@ its node.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -46,15 +48,7 @@ from heatmap_spark.operators.similarity import (
     nn_descent_graph,
     norm_expr,
 )
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
-)
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
+from heatmap_spark.streaming.logstore import LogStore, _committed_batches
 
 
 def _with_norms(df: DataFrame) -> DataFrame:
@@ -107,72 +101,49 @@ def read_vectors(spark: SparkSession, store: str) -> DataFrame:
     return _with_norms(spark.read.option("mergeSchema", "true").parquet(*dirs))
 
 
-def _edges_base(spark: SparkSession, store: str):
-    """(compacted edge base, version, max folded batch id) —
-    (None, -1, -1) if never compacted."""
-    fs = _Fs()
-    marker = _join(store, "edges_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store, "edges_base", f"v={ver}")),
-        ver,
-        folded,
-    )
+def _latest_per_src(tagged: DataFrame) -> DataFrame:
+    """Per src, the edges of its LATEST contributing batch ``b``."""
+    latest = tagged.groupBy("src").agg(F.max("b").alias("b"))
+    return tagged.join(latest, ["src", "b"]).select("src", "dst", "sim")
 
 
-def read_graph_edges(spark: SparkSession, store: str) -> DataFrame:
+class _EdgeLog(LogStore):
+    """The edge log tags each row with its batch where it is read:
+    partials with the id of the ``batch=<id>`` dir their file sits in,
+    the compacted base (every folded batch already resolved to
+    per-src-latest) with -1 — so the base wins only where no later
+    partial touched the src."""
+
+    def _fold(self, spark, partials, base):
+        parts = []
+        if partials:
+            tag = F.regexp_extract(F.input_file_name(), r"batch=(\d+)/[^/]+$", 1)
+            parts.append(
+                spark.read.parquet(*partials).withColumn("b", tag.cast("int"))
+            )
+        if base is not None:
+            parts.append(base.withColumn("b", F.lit(-1)))
+        if not parts:
+            return None
+        return self.fold(reduce(DataFrame.unionByName, parts))
+
+
+_EDGES = _EdgeLog("edges", _latest_per_src)
+
+
+def read_graph_edges(spark: SparkSession, store: str) -> DataFrame | None:
     """Current adjacency: per src, the edges of its LATEST contributing
-    batch (later insertions supersede a node's earlier out-edges).
-    Reads the compacted base (every folded batch already resolved to
-    per-src-latest) plus only the post-fold partials — the base wins
-    only where no later partial touched the src, so the union rule is
-    "base at batch −1, partials at their real ids, max wins"."""
-    base, _ver, folded = _edges_base(spark, store)
-    dirs = _committed_batches(store, "edges", min_batch=folded)
-    parts = None
-    if dirs:
-        parts = spark.read.parquet(*dirs).withColumn(
-            "b",
-            F.regexp_extract(F.input_file_name(), r"batch=(\d+)", 1).cast("int"),
-        )
-    if base is not None:
-        tagged = base.withColumn("b", F.lit(-1).cast("int"))
-        parts = tagged if parts is None else parts.unionByName(tagged)
-    latest = parts.groupBy("src").agg(F.max("b").alias("b"))
-    return parts.join(latest, ["src", "b"]).select("src", "dst", "sim")
+    batch (later insertions supersede a node's earlier out-edges),
+    read from the compacted base plus only the post-fold partials."""
+    return _EDGES.accumulated(spark, store)
 
 
 def compact_graph_store(spark: SparkSession, store: str) -> int:
     """LSM compaction: resolve per-src-latest adjacency across the
-    base and every committed edge partial, write it as a new base
-    version (marker-committed, ``ver:folded`` payload — the family
-    protocol), then GC the folded partials.  Returns the number of
-    partials folded.  Same crash contract as the other stores: reads
-    skip partials ≤ the marker's folded id, so the deletes are pure
-    GC and a crash between swap and delete never double-serves an
-    edge set."""
-    fs = _Fs(spark)
-    _base, ver, folded = _edges_base(spark, store)
-    partials = _committed_batches(store, "edges", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store, "edges"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    merged = read_graph_edges(spark, store)
-    merged.write.mode("overwrite").parquet(
-        _join(store, "edges_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store, "edges_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    for p in _committed_batches(store, "edges"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-    return len(partials)
+    base and every committed edge partial into a new base version,
+    then GC the folded partials.  Returns the number of partials
+    folded."""
+    return _EDGES.compact(spark, store)
 
 
 def merge_batch_into_graph_store(
@@ -191,102 +162,96 @@ def merge_batch_into_graph_store(
     neighborhoods → plus a random-bucket draw for navigability),
     write the new nodes' out-edges, and refresh the touched old
     nodes."""
-    if batch_id <= _read_last_batch(store):
-        return False
-    fs = _Fs(spark)
-    # the vector log stores the norm alongside each vector: the merge
-    # scores candidates in 3 joins and serving in 2 more, and each
-    # scoring side needed the norm — computing it once at ingest
-    # removes ~6 per-corpus-row norm evaluations per batch (r12,
-    # guide §4 "heavyweight work once"); doubles round-trip parquet
-    # bit-exactly, so every sim is the identical float.
-    # lazy: the vectors write below is the first consumer and
-    # materializes the checkpoint inside its own job (r13 — one fewer
-    # driver-synchronous job per batch, same blocks either way)
-    batch = batch.select(
-        "vec_id", "vec", norm_expr(F.col("vec")).alias("nrm")
-    ).localCheckpoint(eager=False)
-    batch.write.mode("overwrite").parquet(
-        _join(store, "vectors", f"batch={batch_id}")
-    )
-    prior_dirs = _committed_batches(store, "vectors")
-    if not prior_dirs:
-        edges = nn_descent_graph(batch, degree=degree, iters=3)
-    else:
-        old = _with_norms(
-            spark.read.option("mergeSchema", "true").parquet(*prior_dirs)
-        )  # tolerate pre-norms batches (ADVICE r12)
-        allv = old.unionByName(batch, allowMissingColumns=True)
-        new_ids = batch.select(F.col("vec_id").alias("src"))
-        # (1) coarse reps: hash-promoted members of the ACCUMULATED set
-        coarse = old.where(F.pmod(F.hash("vec_id"), F.lit(branch)) == 0)
-        if coarse.isEmpty():
-            coarse = old
-        rep_edges = _topk(
-            _scored(
-                new_ids.crossJoin(
-                    F.broadcast(coarse.select(F.col("vec_id").alias("dst")))
+
+    def write(dest):
+        # the vector log stores the norm alongside each vector: the merge
+        # scores candidates in 3 joins and serving in 2 more, and each
+        # scoring side needed the norm — computing it once at ingest
+        # removes ~6 per-corpus-row norm evaluations per batch; doubles
+        # round-trip parquet bit-exactly, so every sim is the identical
+        # float.  Lazy: the vectors write below is the first consumer and
+        # materializes the checkpoint inside its own job (one fewer
+        # driver-synchronous job per batch, same blocks either way)
+        vecs = batch.select(
+            "vec_id", "vec", norm_expr(F.col("vec")).alias("nrm")
+        ).localCheckpoint(eager=False)
+        vecs.write.mode("overwrite").parquet(dest("vectors"))
+        prior_dirs = _committed_batches(store, "vectors")
+        if not prior_dirs:
+            edges = nn_descent_graph(vecs, degree=degree, iters=3)
+        else:
+            old = _with_norms(
+                spark.read.option("mergeSchema", "true").parquet(*prior_dirs)
+            )  # tolerate pre-norms batches
+            allv = old.unionByName(vecs, allowMissingColumns=True)
+            new_ids = vecs.select(F.col("vec_id").alias("src"))
+            # (1) coarse reps: hash-promoted members of the ACCUMULATED set
+            coarse = old.where(F.pmod(F.hash("vec_id"), F.lit(branch)) == 0)
+            if coarse.isEmpty():
+                coarse = old
+            rep_edges = _topk(
+                _scored(
+                    new_ids.crossJoin(
+                        F.broadcast(coarse.select(F.col("vec_id").alias("dst")))
+                    ),
+                    allv,
                 ),
+                reps,
+            ).select("src", "dst")
+            # current adjacency is consumed TWICE per merge (hop expansion
+            # here, refresh below) — resolve the per-src-latest read once
+            # and materialize it instead of re-running the multi-batch
+            # read + window per consumer (the stored set is the graph
+            # itself, the same volume compaction writes).
+            # Lazy: the first consuming job materializes it, so no extra
+            # standalone job is scheduled.
+            cur = read_graph_edges(spark, store).localCheckpoint(eager=False)
+            # (2) expand reps through the current graph, 2 hops
+            g = cur.select(
+                F.col("src").alias("hop_src"), F.col("dst").alias("hop_dst")
+            )
+            hop1 = rep_edges.join(
+                g, rep_edges["dst"] == g["hop_src"]
+            ).select("src", F.col("hop_dst").alias("dst"))
+            hop2 = hop1.join(g, hop1["dst"] == g["hop_src"]).select(
+                "src", F.col("hop_dst").alias("dst")
+            )
+            # (3) random-bucket draw across old vectors (navigability)
+            nb = max(1, old.count() // (degree // 2 + 1))
+            draw = new_ids.withColumn(
+                "b", F.pmod(F.hash("src"), F.lit(nb))
+            ).join(
+                old.select(
+                    F.col("vec_id").alias("dst"),
+                    F.pmod(F.hash("vec_id"), F.lit(nb)).alias("b"),
+                ),
+                "b",
+            ).select("src", "dst")
+            # intra-batch candidates so new nodes link each other too
+            intra = nn_descent_graph(vecs, degree=degree, iters=2).select(
+                "src", "dst"
+            )
+            cand = (
+                rep_edges.union(hop1).union(hop2).union(draw).union(intra)
+                .where(F.col("src") != F.col("dst"))
+                .distinct()
+            )
+            new_out = _topk(_scored(cand, allv), degree)
+            # old nodes adopt better new neighbors: top-K over existing ∪
+            # incoming, rewritten ONLY for touched srcs
+            incoming = _scored(
+                new_out.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                ).distinct(),
                 allv,
-            ),
-            reps,
-        ).select("src", "dst")
-        # current adjacency is consumed TWICE per merge (hop expansion
-        # here, refresh below) — resolve the per-src-latest read once
-        # and materialize it instead of re-running the multi-batch
-        # read + window per consumer (r12, guide §1.2; the stored set
-        # is the graph itself, the same volume compaction writes).
-        # Lazy: the first consuming job materializes it, so no extra
-        # standalone job is scheduled.
-        cur = read_graph_edges(spark, store).localCheckpoint(eager=False)
-        # (2) expand reps through the current graph, 2 hops
-        g = cur.select(
-            F.col("src").alias("hop_src"), F.col("dst").alias("hop_dst")
-        )
-        hop1 = rep_edges.join(
-            g, rep_edges["dst"] == g["hop_src"]
-        ).select("src", F.col("hop_dst").alias("dst"))
-        hop2 = hop1.join(g, hop1["dst"] == g["hop_src"]).select(
-            "src", F.col("hop_dst").alias("dst")
-        )
-        # (3) random-bucket draw across old vectors (navigability)
-        nb = max(1, old.count() // (degree // 2 + 1))
-        draw = new_ids.withColumn(
-            "b", F.pmod(F.hash("src"), F.lit(nb))
-        ).join(
-            old.select(
-                F.col("vec_id").alias("dst"),
-                F.pmod(F.hash("vec_id"), F.lit(nb)).alias("b"),
-            ),
-            "b",
-        ).select("src", "dst")
-        # intra-batch candidates so new nodes link each other too
-        intra = nn_descent_graph(batch, degree=degree, iters=2).select(
-            "src", "dst"
-        )
-        cand = (
-            rep_edges.union(hop1).union(hop2).union(draw).union(intra)
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        new_out = _topk(_scored(cand, allv), degree)
-        # old nodes adopt better new neighbors: top-K over existing ∪
-        # incoming, rewritten ONLY for touched srcs
-        incoming = _scored(
-            new_out.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ).distinct(),
-            allv,
-        )
-        touched = incoming.select("src").distinct()
-        existing = cur.join(touched, "src")
-        refreshed = _topk(existing.unionByName(incoming).distinct(), degree)
-        edges = new_out.unionByName(refreshed)
-    _topk(edges, degree).write.mode("overwrite").parquet(
-        _join(store, "edges", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store, _LATEST), str(batch_id))
-    return True
+            )
+            touched = incoming.select("src").distinct()
+            existing = cur.join(touched, "src")
+            refreshed = _topk(existing.unionByName(incoming).distinct(), degree)
+            edges = new_out.unionByName(refreshed)
+        _topk(edges, degree).write.mode("overwrite").parquet(dest("edges"))
+
+    return _EDGES.commit(spark, store, batch_id, write)
 
 
 def search_graph_store(

@@ -2,9 +2,9 @@
 
 HLL registers merge by per-bucket max — commutative, associative, and
 IDEMPOTENT, which makes them the strongest case for the repo's shared
-log-structured store protocol (passages.py: per-batch dirs, `_LATEST`
-marker committed last so replays are no-ops, LSM compaction with a
-folded-batch marker making partial deletes pure GC): even a re-merged
+log-structured store protocol (streaming/logstore.py: per-batch dirs,
+`_LATEST` marker committed last so replays are no-ops, LSM compaction
+with a folded-batch marker making partial deletes pure GC): even a re-merged
 batch could never change the accumulated registers, so exactly-once
 here is belt-and-braces rather than load-bearing.
 
@@ -33,46 +33,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.profiling import hll_register_table
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
+from heatmap_spark.streaming.logstore import LogStore
+
+_REGS = LogStore(
+    "regs",
+    lambda df: df.groupBy("event_type", "bucket").agg(F.max("rho").alias("rho")),
 )
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
-
-
-def _regs_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "regs_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "regs_base", f"v={ver}")),
-        ver,
-        folded,
-    )
 
 
 def accumulated_registers(spark: SparkSession, store_path: str) -> DataFrame | None:
     """(event_type, bucket, rho) max-merged over compacted base +
     partials since its fold — the register-merge identity."""
-    base, _, folded = _regs_base(spark, store_path)
-    dirs = _committed_batches(store_path, "regs", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return allp.groupBy("event_type", "bucket").agg(F.max("rho").alias("rho"))
+    return _REGS.accumulated(spark, store_path)
 
 
 def merge_batch_into_hll_store(
@@ -81,60 +53,11 @@ def merge_batch_into_hll_store(
     """Ingest one (event_type, user_id) micro-batch: write its partial
     register table, then commit the marker.  Returns False (no-op) on
     replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
     regs = hll_register_table(batch_events, "user_id", ["event_type"])
-    regs.write.mode("overwrite").parquet(
-        _join(store_path, "regs", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
-
-
-def stream_hll(events_stream: DataFrame, store_path: str, checkpoint_path: str):
-    """Maintain the register store from an (event_type, user_id) stream
-    via foreachBatch (availableNow trigger)."""
-    spark = events_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_hll_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        events_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _REGS.commit(spark, store_path, batch_id, regs)
 
 
 def compact_hll_store(spark: SparkSession, store_path: str) -> int:
     """LSM compaction: fold committed register partials into a new base
-    (per-bucket max), folded-batch marker + pure-GC deletes."""
-    fs = _Fs(spark)
-    base, ver, folded = _regs_base(spark, store_path)
-    partials = _committed_batches(store_path, "regs", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "regs"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = allp.groupBy("event_type", "bucket").agg(F.max("rho").alias("rho"))
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "regs_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "regs_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "regs"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
+    (per-bucket max).  Returns the number of partials folded."""
+    return _REGS.compact(spark, store_path)

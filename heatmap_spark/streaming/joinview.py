@@ -15,7 +15,7 @@ A pair whose left row arrives in batch i and right row in batch j is
 emitted exactly at batch max(i, j) — by the first term when i > j, the
 second when i < j, the third when i = j — and never again.
 
-Store layout (passages.py protocol: per-batch dirs, `_LATEST` marker
+Store layout (logstore.py protocol: per-batch dirs, `_LATEST` marker
 committed last so replays are no-ops, LSM compaction with a
 folded-batch marker):
 
@@ -37,32 +37,19 @@ maintenance rung; the aggregate rungs are tile_store/cms/hll/vocab).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
-)
-from heatmap_spark.streaming.tile_store import _Fs, _join
+from heatmap_spark.streaming.logstore import LogStore, _committed_batches
 
-_LATEST = "_LATEST"
+# the delta rule emits every pair exactly once, so the view folds by
+# plain concatenation — no combine, no dedup pass
+_VIEW = LogStore("view")
 
 
-def _read_union(spark: SparkSession, dirs: list[str]) -> DataFrame | None:
+def _state(spark: SparkSession, store_path: str, side: str) -> DataFrame | None:
+    """One input side's committed deltas — everything before the batch
+    being ingested, since commit only runs above the marker."""
+    dirs = _committed_batches(store_path, side)
     return spark.read.parquet(*dirs) if dirs else None
-
-
-def _state_before(
-    spark: SparkSession, store_path: str, side: str, batch_id: int
-) -> DataFrame | None:
-    dirs = [
-        p
-        for p in _committed_batches(store_path, side)
-        if _batch_id(p) < batch_id
-    ]
-    return _read_union(spark, dirs)
 
 
 def merge_batch_into_join_view(
@@ -77,125 +64,36 @@ def merge_batch_into_join_view(
     write the three delta-join terms' union as the batch's view
     partial, persist the deltas as join state, then commit the marker.
     Returns False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    l_state = _state_before(spark, store_path, "left", batch_id)
-    r_state = _state_before(spark, store_path, "right", batch_id)
 
-    terms = [left_delta.join(right_delta, on)]
-    if r_state is not None:
-        terms.append(left_delta.join(r_state, on))
-    if l_state is not None:
-        terms.append(l_state.join(right_delta, on))
-    new_rows = terms[0]
-    for t in terms[1:]:
-        new_rows = new_rows.unionByName(t)
+    def write(dest):
+        l_state = _state(spark, store_path, "left")
+        r_state = _state(spark, store_path, "right")
+        terms = [left_delta.join(right_delta, on)]
+        if r_state is not None:
+            terms.append(left_delta.join(r_state, on))
+        if l_state is not None:
+            terms.append(l_state.join(right_delta, on))
+        new_rows = terms[0]
+        for t in terms[1:]:
+            new_rows = new_rows.unionByName(t)
+        new_rows.write.mode("overwrite").parquet(dest("view"))
+        left_delta.write.mode("overwrite").parquet(dest("left"))
+        right_delta.write.mode("overwrite").parquet(dest("right"))
 
-    new_rows.write.mode("overwrite").parquet(
-        _join(store_path, "view", f"batch={batch_id}")
-    )
-    left_delta.write.mode("overwrite").parquet(
-        _join(store_path, "left", f"batch={batch_id}")
-    )
-    right_delta.write.mode("overwrite").parquet(
-        _join(store_path, "right", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
-
-
-def _view_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "view_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "view_base", f"v={ver}")),
-        ver,
-        folded,
-    )
+    return _VIEW.commit(spark, store_path, batch_id, write)
 
 
 def read_join_view(spark: SparkSession, store_path: str) -> DataFrame | None:
     """The maintained view: compacted base + partials since its fold.
     Plain union — the delta rule guarantees pair-exactly-once, so no
     dedup pass is ever needed."""
-    base, _, folded = _view_base(spark, store_path)
-    dirs = _committed_batches(store_path, "view", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _VIEW.accumulated(spark, store_path)
 
 
 def compact_join_view(spark: SparkSession, store_path: str) -> int:
     """LSM compaction of the VIEW partials (concatenation, not a
-    combine — rows are already exactly-once); folded-batch marker +
-    pure-GC deletes.  Input-state dirs stay per-batch: they are read
+    combine — rows are already exactly-once).  Returns the number of
+    partials folded.  Input-state dirs stay per-batch: they are read
     only as "everything before batch t", which directory listing
     already answers."""
-    fs = _Fs(spark)
-    base, ver, folded = _view_base(spark, store_path)
-    partials = _committed_batches(store_path, "view", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "view"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    allp.write.mode("overwrite").parquet(
-        _join(store_path, "view_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "view_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "view"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
-
-
-def stream_join_view(
-    left_stream: DataFrame,
-    right_stream: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    on: list[str],
-):
-    """Maintain the view from two file streams via a single foreachBatch
-    over their union (each side tagged, split inside the batch) —
-    Structured Streaming runs one query, the store serializes batches."""
-    spark = left_stream.sparkSession
-    tagged = left_stream.withColumn("__side", F.lit("l")).unionByName(
-        right_stream.withColumn("__side", F.lit("r")), allowMissingColumns=True
-    )
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        lcols = [c for c in left_stream.columns]
-        rcols = [c for c in right_stream.columns]
-        ld = batch_df.where(F.col("__side") == "l").select(*lcols)
-        rd = batch_df.where(F.col("__side") == "r").select(*rcols)
-        merge_batch_into_join_view(spark, store_path, batch_id, ld, rd, on)
-
-    return (
-        tagged.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _VIEW.compact(spark, store_path)

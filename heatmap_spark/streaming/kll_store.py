@@ -66,15 +66,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heatmap_spark.streaming.passages import (
-    _batch_id,
+from heatmap_spark.streaming.logstore import (
+    LogStore,
     _committed_batches,
-    _parse_base_marker,
+    _Fs,
+    _join,
     _read_last_batch,
+    foreach_batch,
 )
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
 
 #: literal rank grid resolution for CDF inversion at serve time —
 #: matched to the default sketch k=200 so grid error (1/g) stays
@@ -113,19 +112,7 @@ def _sketch_fold(df: DataFrame) -> DataFrame:
     )
 
 
-def _sk_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "sk_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "sk_base", f"v={ver}")),
-        ver,
-        folded,
-    )
+_SK = LogStore("sk", _sketch_fold)
 
 
 def merge_batch_into_kll_store(
@@ -139,14 +126,9 @@ def merge_batch_into_kll_store(
     one hash aggregate over the batch; the partial is sketch-sized
     (KBs per event_type), not batch-sized.  Returns False (no-op) on
     replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    _half_sketch_partial(labeled_batch).write.mode("overwrite").parquet(
-        _join(store_path, "sk", f"batch={batch_id}")
+    return _SK.commit(
+        spark, store_path, batch_id, _half_sketch_partial(labeled_batch)
     )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
 
 
 def accumulated_sketches(
@@ -156,68 +138,13 @@ def accumulated_sketches(
     compacted base + partials since its fold.  The exact counters
     (n/min/max) sum/min/max-merge exactly; the sketches merge with the
     KLL guarantee."""
-    base, _, folded = _sk_base(spark, store_path)
-    dirs = _committed_batches(store_path, "sk", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return _sketch_fold(allp)
+    return _SK.accumulated(spark, store_path)
 
 
 def compact_kll_store(spark: SparkSession, store_path: str) -> int:
-    """LSM compaction: sketch-merge committed partials into a new
-    base, folded-batch marker + pure-GC deletes — the crash-safe
-    protocol shared by every store in this package."""
-    fs = _Fs(spark)
-    base, ver, folded = _sk_base(spark, store_path)
-    partials = _committed_batches(store_path, "sk", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "sk"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = _sketch_fold(allp)
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "sk_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "sk_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "sk"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
-
-
-def stream_kll_drift(
-    labeled_stream: DataFrame, store_path: str, checkpoint_path: str
-):
-    """Maintain the sketch store from a labeled (event_type, is_a,
-    value) stream via foreachBatch (availableNow trigger)."""
-    spark = labeled_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_kll_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        labeled_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """LSM compaction: sketch-merge committed partials into a new base.
+    Returns the number of partials folded."""
+    return _SK.compact(spark, store_path)
 
 
 def stream_binning(
@@ -238,11 +165,8 @@ def stream_binning(
     missing snapshot/histogram are emitted then (an older replayed
     batch skips the emits entirely — its snapshot window has
     passed)."""
-    spark = labeled_stream.sparkSession
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _merge(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into_kll_store(spark, batch_df, store_path, batch_id)
         if batch_id == _read_last_batch(store_path):
             emit_binning_snapshot(spark, store_path, batch_id, n_bins)
@@ -253,12 +177,7 @@ def stream_binning(
                 batch_id,
             )
 
-    return (
-        labeled_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch(labeled_stream, checkpoint_path, _merge)
 
 
 def _acc_or_raise(spark: SparkSession, store_path: str) -> DataFrame:

@@ -13,9 +13,9 @@ own batch, hence survives its batch's top-k — so
 bit-for-bit, not approximately.  Merge is therefore commutative,
 associative, and idempotent (distinct folds replays away), which slots
 straight into the repo's shared log-structured store protocol
-(passages.py: per-batch dirs, `_LATEST` committed last so replays are
-no-ops, LSM compaction with a folded-batch marker making partial
-deletes pure GC):
+(streaming/logstore.py: per-batch dirs, `_LATEST` committed last so
+replays are no-ops, LSM compaction with a folded-batch marker making
+partial deletes pure GC):
 
 * ``sk/batch=<id>``  — the batch's (event_type, hv) top-k partial,
   ≤ k rows per event type regardless of batch size.
@@ -44,15 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from heatmap_spark.operators.profiling import _KMV_K, _KMV_SCALE, kmv_hashes
-from heatmap_spark.streaming.passages import (
-    _batch_id,
-    _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
-)
-from heatmap_spark.streaming.tile_store import _Fs, _join
-
-_LATEST = "_LATEST"
+from heatmap_spark.streaming.logstore import LogStore
 
 
 def _topk(hashes: DataFrame, k: int) -> DataFrame:
@@ -66,19 +58,8 @@ def _topk(hashes: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _sk_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "sk_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "sk_base", f"v={ver}")),
-        ver,
-        folded,
-    )
+def _store(k: int) -> LogStore:
+    return LogStore("sk", lambda df: _topk(df.distinct(), k))
 
 
 def merge_batch_into_kmv_store(
@@ -91,15 +72,8 @@ def merge_batch_into_kmv_store(
     """Ingest one (event_type, user_id) micro-batch: write its ≤k-row
     per-type sketch partial, then commit the marker.  Returns False
     (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
     partial = _topk(kmv_hashes(batch_events, "user_id", ["event_type"]), k)
-    partial.write.mode("overwrite").parquet(
-        _join(store_path, "sk", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+    return _store(k).commit(spark, store_path, batch_id, partial)
 
 
 def accumulated_sketch(
@@ -107,68 +81,16 @@ def accumulated_sketch(
 ) -> DataFrame | None:
     """(event_type, hv) per-type k-minimum sketch over compacted base +
     partials since its fold — the exact KMV merge identity."""
-    base, _, folded = _sk_base(spark, store_path)
-    dirs = _committed_batches(store_path, "sk", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return _topk(allp.distinct(), k)
-
-
-def stream_kmv(events_stream: DataFrame, store_path: str, checkpoint_path: str):
-    """Maintain the sketch store from an (event_type, user_id) stream
-    via foreachBatch (availableNow trigger)."""
-    spark = events_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_kmv_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        events_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _store(k).accumulated(spark, store_path)
 
 
 def compact_kmv_store(
     spark: SparkSession, store_path: str, k: int = _KMV_K
 ) -> int:
     """LSM compaction: fold committed sketch partials into a new base
-    (distinct + per-type top-k), folded-batch marker + pure-GC
-    deletes."""
-    fs = _Fs(spark)
-    base, ver, folded = _sk_base(spark, store_path)
-    partials = _committed_batches(store_path, "sk", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "sk"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = _topk(allp.distinct(), k)
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "sk_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "sk_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    removed = 0
-    for p in _committed_batches(store_path, "sk"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-            removed += 1
-    return removed
+    (distinct + per-type top-k).  Returns the number of partials
+    folded."""
+    return _store(k).compact(spark, store_path)
 
 
 def serve_kmv_estimates(

@@ -26,10 +26,10 @@ exactly the LSM trade every log-structured store makes.
 Exactly-once under crash/replay: every per-batch directory write is
 mode("overwrite") keyed by batch_id (a replayed batch rewrites
 byte-identical content), and the ``_LATEST`` marker — swapped
-atomically via the same :class:`heatmap_spark.streaming.tile_store._Fs`
-protocol, AFTER all three directories land — records the last
-committed batch.  Replays of committed batches are skipped; readers
-only trust batch dirs ≤ the marker, so a crash mid-write is invisible.
+atomically AFTER all three directories land, the shared protocol of
+:mod:`heatmap_spark.streaming.logstore` — records the last committed
+batch.  Replays of committed batches are skipped; readers only trust
+batch dirs ≤ the marker, so a crash mid-write is invisible.
 
 Docs are assumed to arrive EXACTLY ONCE across batches (each doc in
 one batch) — the same contract as incremental_dedup; re-ingesting a
@@ -42,46 +42,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.dedup import passage_windows
-from heatmap_spark.streaming.tile_store import _Fs, _join
+from heatmap_spark.streaming.logstore import (
+    LogStore,
+    _committed_batches,
+    foreach_batch,
+)
 
-_LATEST = "_LATEST"
-
-
-def _read_last_batch(store_path: str) -> int:
-    fs = _Fs()
-    marker = _join(store_path, _LATEST)
-    if not fs.exists(marker):
-        return -1
-    return int(fs.read_text(marker).strip())
-
-
-def _batch_id(path: str) -> int:
-    return int(path.rsplit("batch=", 1)[1])
-
-
-def _committed_batches(
-    store_path: str, sub: str, min_batch: int = -1
-) -> list[str]:
-    """Paths of ``sub``'s per-batch dirs with ``min_batch`` < id ≤ the
-    committed marker (uncommitted/partial dirs from a crashed attempt
-    are ignored; dirs already folded into a compacted base are skipped
-    via ``min_batch`` so a crash between the base-marker swap and the
-    partial deletes can never double-count — deletion is pure GC)."""
-    fs = _Fs()
-    last = _read_last_batch(store_path)
-    out = []
-    for d in fs.list_names(_join(store_path, sub)):
-        if d.startswith("batch="):
-            if min_batch < int(d.split("=", 1)[1]) <= last:
-                out.append(_join(store_path, sub, d))
-    return sorted(out)
-
-
-def _parse_base_marker(text: str) -> tuple[int, int]:
-    """Base-marker payload ``"<ver>"`` (legacy) or
-    ``"<ver>:<folded_batch>"`` → (version, max folded batch id)."""
-    parts = text.strip().split(":")
-    return int(parts[0]), (int(parts[1]) if len(parts) > 1 else -1)
+_DF = LogStore(
+    "df",
+    lambda df: df.groupBy("h").agg(F.sum("df").cast("bigint").alias("df")),
+)
 
 
 def merge_batch_into_passage_store(
@@ -90,27 +60,21 @@ def merge_batch_into_passage_store(
 ) -> bool:
     """Ingest one micro-batch of (doc_id, text) rows.  Returns False
     (no-op) when ``batch_id`` was already committed — the replay guard."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    wins = passage_windows(batch_docs, w)
-    postings = wins.groupBy("doc_id", "h").agg(
-        F.count("*").cast("bigint").alias("cnt")
-    )
-    postings.write.mode("overwrite").parquet(
-        _join(store_path, "postings", f"batch={batch_id}")
-    )
-    # df partial reads the postings JUST WRITTEN (not the lazy window
-    # stream), so tokenize+hash runs once per batch
-    written = spark.read.parquet(_join(store_path, "postings", f"batch={batch_id}"))
-    written.groupBy("h").agg(F.count("*").cast("bigint").alias("df")).write.mode(
-        "overwrite"
-    ).parquet(_join(store_path, "df", f"batch={batch_id}"))
-    batch_docs.select("doc_id").write.mode("overwrite").parquet(
-        _join(store_path, "docs", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+
+    def write(dest):
+        postings = passage_windows(batch_docs, w).groupBy("doc_id", "h").agg(
+            F.count("*").cast("bigint").alias("cnt")
+        )
+        postings.write.mode("overwrite").parquet(dest("postings"))
+        # df partial reads the postings JUST WRITTEN (not the lazy window
+        # stream), so tokenize+hash runs once per batch
+        written = spark.read.parquet(dest("postings"))
+        written.groupBy("h").agg(
+            F.count("*").cast("bigint").alias("df")
+        ).write.mode("overwrite").parquet(dest("df"))
+        batch_docs.select("doc_id").write.mode("overwrite").parquet(dest("docs"))
+
+    return _DF.commit(spark, store_path, batch_id, write)
 
 
 def stream_duplicated_passages(
@@ -122,35 +86,12 @@ def stream_duplicated_passages(
     """Maintain the passage store from a (doc_id, text) stream via
     foreachBatch.  Returns the started StreamingQuery (availableNow
     trigger — call ``.awaitTermination()``)."""
-    spark = docs_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_passage_store(spark, batch_df, store_path, batch_id, w)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _df_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    """(current compacted df base, its version, max batch id folded
-    into it) — (None, -1, -1) if never compacted."""
-    fs = _Fs()
-    marker = _join(store_path, "df_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "df_base", f"v={ver}")),
-        ver,
-        folded,
+    return foreach_batch(
+        docs_stream,
+        checkpoint_path,
+        lambda spark, df, b: merge_batch_into_passage_store(
+            spark, df, store_path, b, w
+        ),
     )
 
 
@@ -159,62 +100,19 @@ def dup_hashes(spark: SparkSession, store_path: str) -> DataFrame:
     ≥ 2 — the live duplicated-passage set: compacted base + the df
     partials written since, summed per hash.  One shuffle over
     (recent partials + base), never over raw postings or text."""
-    base, _, folded = _df_base(spark, store_path)
-    partials = _committed_batches(store_path, "df", min_batch=folded)
-    parts = [spark.read.parquet(p) for p in partials]
-    if base is not None:
-        parts.append(base)
-    if not parts:
+    acc = _DF.accumulated(spark, store_path)
+    if acc is None:
         return spark.createDataFrame([], "h string")
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return (
-        allp.groupBy("h")
-        .agg(F.sum("df").alias("df"))
-        .where(F.col("df") >= 2)
-        .select("h")
-    )
+    return acc.where(F.col("df") >= 2).select("h")
 
 
 def compact_passage_store(spark: SparkSession, store_path: str) -> int:
     """LSM compaction: fold every committed df partial into a new df
-    base version (marker-committed via the tile-store protocol), then
-    delete the folded partials.  Returns the number of partials folded.
-    Run with no concurrent compactor; safe against a concurrent WRITER
-    (a partial written after the fold's listing is simply not folded
-    and survives for the next compaction).  Crash-safe against partial
-    deletion: the base marker records the max FOLDED batch id, and all
-    reads skip df partials ≤ that id — so the deletes below are pure
-    GC, and a crash between the marker swap and the deletes can never
-    double-count a partial."""
-    fs = _Fs(spark)
-    base, ver, folded = _df_base(spark, store_path)
-    partials = _committed_batches(store_path, "df", min_batch=folded)
-    if not partials:
-        # nothing new to fold — still GC any ≤-folded stragglers a
-        # prior crashed compaction left behind
-        for p in _committed_batches(store_path, "df"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = allp.groupBy("h").agg(F.sum("df").cast("bigint").alias("df"))
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "df_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "df_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    # pure GC from here on — includes any ≤-folded stragglers a prior
-    # crashed compaction left behind
-    for p in _committed_batches(store_path, "df"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-    return len(partials)
+    base version, then delete the folded partials (pure GC — see
+    :meth:`~heatmap_spark.streaming.logstore.LogStore.compact` for the
+    crash and concurrent-writer contract).  Returns the number of
+    partials folded."""
+    return _DF.compact(spark, store_path)
 
 
 def read_duplicated_passages(spark: SparkSession, store_path: str) -> DataFrame:

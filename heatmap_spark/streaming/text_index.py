@@ -154,30 +154,27 @@ def merge_batch_into_index(
     accumulation is pure union — postings never rewrite; df/n_docs
     re-aggregate at read or fold at compaction."""
     from heatmap_spark.operators.textops import _all_tokens
-    from heatmap_spark.streaming.passages import _read_last_batch
-    from heatmap_spark.streaming.tile_store import _Fs, _join
+    from heatmap_spark.streaming.logstore import _join, commit_batch
 
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    toks = batch_docs.select("doc_id", F.explode(_all_tokens()).alias("term"))
-    postings = (
-        toks.groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("bucket", term_bucket_col(F.col("term")))
-    )
-    (
-        postings.repartition("bucket")
-        .sortWithinPartitions("bucket", "term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(_join(store_path, "inc", f"batch={batch_id}", "postings"))
-    )
-    batch_docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")).write.mode(
-        "overwrite"
-    ).parquet(_join(store_path, "inc", f"batch={batch_id}", "stats"))
-    fs.write_text_atomic(_join(store_path, "_LATEST"), str(batch_id))
-    return True
+    def write(dest):
+        toks = batch_docs.select("doc_id", F.explode(_all_tokens()).alias("term"))
+        postings = (
+            toks.groupBy("term", "doc_id")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn("bucket", term_bucket_col(F.col("term")))
+        )
+        (
+            postings.repartition("bucket")
+            .sortWithinPartitions("bucket", "term", "doc_id")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(_join(dest("inc"), "postings"))
+        )
+        batch_docs.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs")
+        ).write.mode("overwrite").parquet(_join(dest("inc"), "stats"))
+
+    return commit_batch(spark, store_path, batch_id, write)
 
 
 def search_incremental_index(
@@ -191,8 +188,7 @@ def search_incremental_index(
     search_index — by mergeability the result is IDENTICAL to a
     one-shot build over the concatenated batches, so the two paths
     share one oracle."""
-    from heatmap_spark.streaming.passages import _committed_batches
-    from heatmap_spark.streaming.tile_store import _join
+    from heatmap_spark.streaming.logstore import _committed_batches, _join
 
     batches = _committed_batches(store_path, "inc")
     if not batches:

@@ -51,218 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from heatmap_spark.operators.layout import cluster_by_zorder
 from heatmap_spark.operators.pyramid import build_pyramid, pyramid_merge
+from heatmap_spark.streaming.logstore import _Fs, _join
 
 _LATEST = "_LATEST"
-
-
-def _join(*parts: str) -> str:
-    """URI-safe path join (never os.path.join — scheme-qualified URIs
-    are not OS paths)."""
-    return "/".join(p.rstrip("/") for p in parts)
-
-
-class _Fs:
-    """Driver-side metadata I/O through Hadoop's FileSystem API.
-
-    Every marker read/write, staging promote, and vacuum delete in
-    this module routes through here, so the commit protocol is
-    storage-agnostic: the same code runs against ``hdfs://``,
-    ``s3a://``, ``abfs://`` or a plain local path, resolved per-path
-    by Hadoop (FileSystem instances are cached JVM-side, so
-    constructing this per call is cheap).
-
-    Atomic marker swap uses FileContext.rename(..., OVERWRITE) — the
-    HDFS-atomic overwrite rename (public Hadoop API).  On object
-    stores without atomic rename the swap degrades to
-    delete+copy-visible semantics; the tiny marker file makes the
-    non-atomic window milliseconds, and a reader that catches it
-    treats the store as "no version committed" and retries.
-
-    Local-filesystem fast path (r12, guide §4/§5): every JVM-backed op
-    here costs 3-8 py4j driver roundtrips; a partitioned-store merge
-    does O(touched buckets) of them per batch (measured: the 255-bucket
-    commit loop alone was 30-43 s/batch at sf0.01, ~all py4j latency).
-    When a path RESOLVES to the local filesystem — an explicit
-    ``file:`` scheme, or no scheme while ``fs.defaultFS`` is ``file:``
-    (checked once per instance) — the op runs as plain POSIX Python
-    (µs, semantically identical: ``os.replace`` is the atomic
-    overwrite-rename, ``os.rename`` the same-FS move Hadoop's
-    RawLocalFileSystem delegates to).  Scheme-qualified remote paths
-    (``hdfs://``, ``s3a://``, ``abfs://``) keep the Hadoop API
-    unchanged, so the commit protocol is still storage-agnostic at
-    cluster scale.
-
-    Falls back to POSIX os calls when no SparkSession is active (pure
-    unit tests, offline vacuum of a local store).
-    """
-
-    def __init__(self, spark: SparkSession | None = None):
-        self._spark = spark or SparkSession.getActiveSession()
-        self._jvm_ready = False
-        if self._spark is None:
-            self._default_local = True
-        else:
-            # cache the fs.defaultFS locality probe ON the session
-            # object (dies with it) — _Fs() is constructed per marker
-            # read and the probe is 2 py4j roundtrips (r12)
-            cached = getattr(self._spark, "_heatmap_fs_default_local", None)
-            if cached is None:
-                sc = self._spark.sparkContext
-                cached = str(
-                    sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-                ).startswith("file:")
-                self._spark._heatmap_fs_default_local = cached
-            self._default_local = cached
-
-    def _ensure_jvm(self) -> None:
-        if not self._jvm_ready:
-            sc = self._spark.sparkContext
-            self._jvm = sc._jvm
-            self._conf = sc._jsc.hadoopConfiguration()
-            self._Path = self._jvm.org.apache.hadoop.fs.Path
-            self._gateway = sc._gateway
-            self._jvm_ready = True
-
-    def _posix(self, path: str) -> str | None:
-        """The plain OS path when ``path`` lives on the local
-        filesystem (see class docstring), else None → use the JVM."""
-        import re
-
-        m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", path)
-        if m is None:
-            return path if (self._spark is None or self._default_local) else None
-        if m.group(1) != "file":
-            return None
-        p = path[len("file:") :]
-        if p.startswith("//"):  # file:///x or file://host/x → strip authority
-            p = "/" + p[2:].split("/", 1)[1] if "/" in p[2:] else "/"
-        return p
-
-    # -- JVM-backed implementations -------------------------------------
-    def _fs(self, path: str):
-        self._ensure_jvm()
-        return self._Path(path).getFileSystem(self._conf)
-
-    def exists(self, path: str) -> bool:
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-
-            return os.path.exists(lp)
-        return self._fs(path).exists(self._Path(path))
-
-    def is_dir(self, path: str) -> bool:
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-
-            return os.path.isdir(lp)
-        fs, p = self._fs(path), self._Path(path)
-        return fs.exists(p) and fs.getFileStatus(p).isDirectory()
-
-    def read_text(self, path: str) -> str:
-        lp = self._posix(path)
-        if lp is not None:
-            with open(lp, encoding="utf-8") as f:
-                return f.read()
-        stream = self._fs(path).open(self._Path(path))
-        try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-
-    def write_text_atomic(self, path: str, text: str) -> None:
-        """Write ``text`` to ``path`` via a sibling temp file + an
-        overwriting rename — readers see the old content or the new,
-        never a partial write."""
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-
-            tmp = lp + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                f.write(text)
-            os.replace(tmp, lp)
-            return
-        tmp = path + ".tmp"
-        out = self._fs(path).create(self._Path(tmp), True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-        fc = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(self._conf)
-        Rename = self._jvm.org.apache.hadoop.fs.Options.Rename
-        opts = self._gateway.new_array(Rename, 1)
-        opts[0] = Rename.OVERWRITE
-        fc.rename(self._Path(tmp), self._Path(path), opts)
-
-    def list_names(self, path: str) -> list[str]:
-        """Child entry names of a directory ([] if missing)."""
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-
-            return os.listdir(lp) if os.path.isdir(lp) else []
-        fs, p = self._fs(path), self._Path(path)
-        if not fs.exists(p):
-            return []
-        return [st.getPath().getName() for st in fs.listStatus(p)]
-
-    def delete(self, path: str) -> None:
-        """Recursive delete; missing path is a no-op."""
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-            import shutil
-
-            if os.path.isdir(lp) and not os.path.islink(lp):
-                shutil.rmtree(lp, ignore_errors=True)
-            else:
-                try:
-                    os.remove(lp)
-                except OSError:
-                    pass
-            return
-        self._fs(path).delete(self._Path(path), True)
-
-    def rename(self, src: str, dst: str) -> bool:
-        """Move src → dst (dst must not exist).  Directory moves are
-        metadata-only on HDFS/local; a copy on S3A — correct either
-        way because the marker swap AFTER this is the commit point."""
-        lsrc, ldst = self._posix(src), self._posix(dst)
-        if lsrc is not None and ldst is not None:
-            import os
-
-            os.rename(lsrc, ldst)
-            return True
-        return self._fs(src).rename(self._Path(src), self._Path(dst))
-
-    def mkdirs(self, path: str) -> None:
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-
-            os.makedirs(lp, exist_ok=True)
-            return
-        self._fs(path).mkdirs(self._Path(path))
-
-    def mtime(self, path: str) -> float | None:
-        """Modification time (epoch seconds), None if missing/racing."""
-        lp = self._posix(path)
-        if lp is not None:
-            import os
-
-            try:
-                return os.path.getmtime(lp)
-            except OSError:
-                return None
-        fs, p = self._fs(path), self._Path(path)
-        try:
-            return fs.getFileStatus(p).getModificationTime() / 1000.0
-        except Exception:
-            return None  # vanished under a racing writer
 
 
 def _read_marker(store_path: str) -> tuple[int, int]:

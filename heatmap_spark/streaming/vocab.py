@@ -4,14 +4,14 @@ A tokenizer trained on yesterday's corpus silently degrades when the
 crawl's vocabulary moves (new domains, new languages, spam bursts).
 This store maintains token-frequency partials per micro-batch —
 log-structured, O(batch vocabulary) per batch, same marker-committed
-exactly-once protocol as the passage/crawl stores — and computes a
+exactly-once protocol as every logstore.py store — and computes a
 DRIFT row per batch at ingest time, against the distribution
 accumulated so far:
 
 * ``vocab/batch=<id>``  — (token, c): the batch's token counts.
 * ``drift/batch=<id>``  — one row of drift metrics for the batch.
 * ``vocab_base/v=<n>``  — LSM compaction target (folded-batch marker,
-  crash-safe GC — the passages.py protocol).
+  crash-safe GC — the logstore.py protocol).
 
 Drift metrics (all exact-arithmetic, so the whole log is value-hash
 oracle-checkable):
@@ -36,15 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heatmap_spark.streaming.passages import (
-    _batch_id,
+from heatmap_spark.streaming.logstore import (
+    LogStore,
     _committed_batches,
-    _parse_base_marker,
-    _read_last_batch,
+    foreach_batch,
 )
-from heatmap_spark.streaming.tile_store import _Fs, _join
 
-_LATEST = "_LATEST"
+_VOCAB = LogStore(
+    "vocab",
+    lambda df: df.groupBy("token").agg(F.sum("c").cast("bigint").alias("c")),
+)
 
 
 def _token_counts(docs: DataFrame) -> DataFrame:
@@ -60,35 +61,10 @@ def _token_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def _vocab_base(
-    spark: SparkSession, store_path: str
-) -> tuple[DataFrame | None, int, int]:
-    fs = _Fs()
-    marker = _join(store_path, "vocab_base", _LATEST)
-    if not fs.exists(marker):
-        return None, -1, -1
-    ver, folded = _parse_base_marker(fs.read_text(marker))
-    return (
-        spark.read.parquet(_join(store_path, "vocab_base", f"v={ver}")),
-        ver,
-        folded,
-    )
-
-
 def accumulated_vocab(spark: SparkSession, store_path: str) -> DataFrame | None:
     """(token, c) accumulated over every committed batch: compacted
     base + partials written since its fold, summed per token."""
-    base, _, folded = _vocab_base(spark, store_path)
-    dirs = _committed_batches(store_path, "vocab", min_batch=folded)
-    parts = [spark.read.parquet(*dirs)] if dirs else []
-    if base is not None:
-        parts.append(base)
-    if not parts:
-        return None
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return allp.groupBy("token").agg(F.sum("c").cast("bigint").alias("c"))
+    return _VOCAB.accumulated(spark, store_path)
 
 
 DRIFT_SCHEMA = (
@@ -172,20 +148,16 @@ def merge_batch_into_vocab_store(
     token-count partial AND its drift row (computed against the vocab
     accumulated BEFORE this batch), then commit the marker.  Returns
     False (no-op) on replay of a committed batch."""
-    if batch_id <= _read_last_batch(store_path):
-        return False
-    fs = _Fs(spark)
-    counts = _token_counts(batch_docs)
-    counts.write.mode("overwrite").parquet(
-        _join(store_path, "vocab", f"batch={batch_id}")
-    )
-    written = spark.read.parquet(_join(store_path, "vocab", f"batch={batch_id}"))
-    prior = accumulated_vocab(spark, store_path)
-    _drift_row(spark, written, prior, batch_id).write.mode("overwrite").parquet(
-        _join(store_path, "drift", f"batch={batch_id}")
-    )
-    fs.write_text_atomic(_join(store_path, _LATEST), str(batch_id))
-    return True
+
+    def write(dest):
+        _token_counts(batch_docs).write.mode("overwrite").parquet(dest("vocab"))
+        written = spark.read.parquet(dest("vocab"))
+        prior = accumulated_vocab(spark, store_path)
+        _drift_row(spark, written, prior, batch_id).write.mode(
+            "overwrite"
+        ).parquet(dest("drift"))
+
+    return _VOCAB.commit(spark, store_path, batch_id, write)
 
 
 def stream_vocab_drift(
@@ -193,18 +165,10 @@ def stream_vocab_drift(
 ):
     """Maintain the vocab store from a (doc_id, text) stream via
     foreachBatch (availableNow trigger)."""
-    spark = docs_stream.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_batch_into_vocab_store(spark, batch_df, store_path, batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return foreach_batch(
+        docs_stream,
+        checkpoint_path,
+        lambda spark, df, b: merge_batch_into_vocab_store(spark, df, store_path, b),
     )
 
 
@@ -218,29 +182,6 @@ def read_vocab_drift(spark: SparkSession, store_path: str) -> DataFrame:
 
 def compact_vocab_store(spark: SparkSession, store_path: str) -> int:
     """LSM compaction: fold committed vocab partials into a new base
-    (summed per token), folded-batch marker + pure-GC deletes — the
-    crash-safe passages.py protocol.  Drift rows are an immutable log
-    and are never touched."""
-    fs = _Fs(spark)
-    base, ver, folded = _vocab_base(spark, store_path)
-    partials = _committed_batches(store_path, "vocab", min_batch=folded)
-    if not partials:
-        for p in _committed_batches(store_path, "vocab"):
-            if _batch_id(p) <= folded:
-                fs.delete(p)
-        return 0
-    new_folded = max(_batch_id(p) for p in partials)
-    allp = spark.read.parquet(*partials)
-    if base is not None:
-        allp = allp.unionByName(base)
-    merged = allp.groupBy("token").agg(F.sum("c").cast("bigint").alias("c"))
-    merged.write.mode("overwrite").parquet(
-        _join(store_path, "vocab_base", f"v={ver + 1}")
-    )
-    fs.write_text_atomic(
-        _join(store_path, "vocab_base", _LATEST), f"{ver + 1}:{new_folded}"
-    )
-    for p in _committed_batches(store_path, "vocab"):
-        if _batch_id(p) <= new_folded:
-            fs.delete(p)
-    return len(partials)
+    (summed per token).  Returns the number of partials folded.  Drift
+    rows are an immutable log and are never touched."""
+    return _VOCAB.compact(spark, store_path)

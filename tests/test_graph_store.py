@@ -137,8 +137,7 @@ def test_pre_norms_store_migrates_transparently(spark, sf_smoke, tmp_path):
     throwing, reads backfill nrm for the old rows (never NULL — a NULL
     norm would silently null every cosine), and serving still clears
     the recall bar."""
-    from heatmap_spark.streaming.passages import _committed_batches
-    from heatmap_spark.streaming.tile_store import _Fs, _join
+    from heatmap_spark.streaming.logstore import _committed_batches, _Fs
 
     emb = _emb(spark, sf_smoke)
     store = str(tmp_path / "g")

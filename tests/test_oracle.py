@@ -113,3 +113,17 @@ def test_priority_window_is_first_50():
         "q_streaming_ann_opq",
         "q_streaming_graph_ann",
     }
+
+
+def test_rows_only_docstring_lists_the_registry():
+    """The registry docstring's rows-only list is exactly the
+    registry's oracle-less set: a new rows-only query must be listed
+    there, and one that gains an oracle must leave the list."""
+    import re
+
+    import heatmap_spark.queries as q
+
+    doc = q.__doc__
+    section = doc[doc.index("Rows-only queries") : doc.index("The portable sketch family")]
+    listed = set(re.findall(r"\bq_\w+", section))
+    assert listed == {k for k, s in REGISTRY.items() if s.oracle is None}

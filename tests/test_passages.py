@@ -5,9 +5,8 @@ from pyspark.sql import functions as F
 
 from heatmap_spark.operators.dedup import duplicated_passages
 from heatmap_spark.sources.tables import load_table
+from heatmap_spark.streaming.logstore import _committed_batches, _read_last_batch
 from heatmap_spark.streaming.passages import (
-    _committed_batches,
-    _read_last_batch,
     compact_passage_store,
     merge_batch_into_passage_store,
     read_duplicated_passages,

@@ -12,15 +12,13 @@ packaging 5 zooms up (heatmap.py:89) and JSON serialization
 
 import datetime as dt
 import json
-import sys
 from collections import defaultdict
 
 import pytest
 
-sys.path.insert(0, "/root/reference")
-from tile import Tile  # noqa: E402  (oracle)
+from tile_oracle import Tile
 
-from heatmap_spark.operators import pyramid as P  # noqa: E402
+from heatmap_spark.operators import pyramid as P
 
 # tz-aware UTC: naive datetimes would be interpreted in the OS-local zone at
 # the Python->JVM boundary while date_format evaluates in the pinned UTC

@@ -207,7 +207,7 @@ def test_fs_layer_handles_scheme_qualified_uris(spark, tmp_path):
     (file:/...) exactly like a bare path — markers, listing, atomic
     overwrite-rename, mtime, recursive delete — since production
     stores are hdfs://s3a:// URIs, never driver-local paths."""
-    from heatmap_spark.streaming.tile_store import _Fs, _join
+    from heatmap_spark.streaming.logstore import _Fs, _join
 
     base = "file:" + str(tmp_path / "fsprobe")
     fs = _Fs(spark)

@@ -1,21 +1,19 @@
 """Property tests for the tile expression library.
 
-Oracle = the reference's own ``tile.py`` (MIT), imported from
-/root/reference and executed directly per SURVEY.md §5.1.  Every Column
-expression must agree with the Python implementation bit-for-bit on
-tile indices and to float tolerance on bounds/centers.
+Oracle = ``tests/tile_oracle.py``, a plain-Python implementation of the
+reference ``tile.py`` closed forms (SURVEY.md §2.6, F1–F10).  Every
+Column expression must agree with the Python implementation bit-for-bit
+on tile indices and to float tolerance on bounds/centers.
 """
 
 import math
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/reference")
-from tile import Tile  # noqa: E402  (oracle, reference tile.py)
+from tile_oracle import Tile
 
-from heatmap_spark.functions import tiles as tl  # noqa: E402
+from heatmap_spark.functions import tiles as tl
 
 # Grid: edge latitudes (Mercator domain ±85.051128), dateline, equator,
 # cities, plus a pseudo-random scatter. Zooms cover {1, 6, 16, 21}.

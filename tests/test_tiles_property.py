@@ -1,20 +1,18 @@
 """Hypothesis property tests for the tile library.
 
 Randomized lat/lon/zoom triples (hundreds per run, minimized on
-failure) checked against the reference tile.py executed directly —
+failure) checked against the plain-Python tile oracle
+(tests/tile_oracle.py, the reference tile.py closed forms) —
 complements the fixed-grid tests in test_tiles.py.  All points go
 through Spark in ONE job per property (collect the generated batch,
 compare in Python) to keep runtime sane.
 """
 
-import sys
-
 from hypothesis import given, settings, strategies as st
 
-sys.path.insert(0, "/root/reference")
-from tile import Tile  # noqa: E402
+from tile_oracle import Tile
 
-from heatmap_spark.functions import tiles as tl  # noqa: E402
+from heatmap_spark.functions import tiles as tl
 
 lat_st = st.floats(min_value=-85.05112878, max_value=85.05112878, allow_nan=False)
 lon_st = st.floats(min_value=-180.0, max_value=179.9999999, allow_nan=False)
