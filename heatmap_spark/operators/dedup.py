@@ -345,31 +345,13 @@ def _posting_double_hash(post: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, salt, minhash): min over shingles of the K–M hash
-    (h1 + salt·h2) mod 2^48.  One explode (doc × salt) + one groupBy —
-    linear in corpus shingle count."""
-    hashed = _posting_double_hash(_doc_shingles(docs))
-    salted = hashed.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("salt"),
-        "h1",
-        "h2",
-    )
-    return salted.groupBy("doc_id", "salt").agg(
-        F.min(
-            (F.col("h1") + F.col("salt") * F.col("h2")) % F.lit(MINHASH_MOD)
-        ).alias("minhash")
-    )
-
-
 def minhash_signatures_wide(docs: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
     """(doc_id, mh0..mh{k-1}): the whole signature in ONE groupBy with k
     min-aggregates — no salt explode, so the shuffle carries |postings|
     rows instead of k·|postings| (the form that wins at 100 TB).
-    Hash family identical to minhash_signatures (K–M double hashing —
-    see _posting_double_hash; subexpression elimination computes the
-    md5 once per posting inside the projection).
+    Hash k is the K–M double hash (h1 + k·h2) mod 2^48 (see
+    _posting_double_hash; subexpression elimination computes the md5
+    once per posting inside the projection).
 
     The k hashes are computed inline per posting — embarrassingly
     parallel, zero extra shuffles.  (A distinct-shingle dictionary +

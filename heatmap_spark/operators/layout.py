@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from heatmap_spark.functions.tiles import hilbert_value, z_value
+from heatmap_spark.functions.tiles import z_value
 
 _ZCOL = "__zorder__"
 
@@ -41,31 +41,6 @@ def cluster_by_zorder(
     skipping works off the ORIGINAL row/col min/max footer stats.
     """
     keyed = df.withColumn(_ZCOL, z_value(row, col, bits))
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (
-        keyed.repartitionByRange(parts, _ZCOL)
-        .sortWithinPartitions(_ZCOL)
-        .drop(_ZCOL)
-    )
-
-
-def cluster_by_hilbert(
-    df: DataFrame,
-    row: str = "row",
-    col: str = "col",
-    bits: int = 21,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Hilbert-curve twin of :func:`cluster_by_zorder`: same
-    range-partition + sort-within layout, keyed by the Hilbert value
-    (functions/tiles.hilbert_value).  The Hilbert curve never makes
-    Morton's long diagonal jumps, so a bbox decomposes into fewer,
-    longer key runs — typically equal-or-fewer overlapping row groups
-    for the same data (compared, not assumed, in
-    tests/test_layout.py).  The key is dropped before write: skipping
-    works off the original row/col footer stats either way.
-    """
-    keyed = df.withColumn(_ZCOL, hilbert_value(row, col, bits))
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     return (
         keyed.repartitionByRange(parts, _ZCOL)
@@ -111,57 +86,6 @@ def row_group_skip_stats(
         "overlapping": overlapping,
         "fraction": overlapping / total if total else 0.0,
     }
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    order_by: tuple[str, ...] = (),
-    writer_options: dict | None = None,
-) -> dict:
-    """Rewrite a parquet directory into ~``target_bytes`` files — the
-    maintenance pass every incremental pipeline needs: frequent small
-    merges (streaming/tile_store.py) accrete small files, and at 100 TB
-    the per-file open/footer cost and scheduler pressure of millions of
-    small files dominate reads long before data volume does.
-
-    ``order_by`` re-establishes a clustering (e.g. the Z-order key) via
-    repartitionByRange + in-partition sort, so compaction REPAIRS data
-    skipping instead of destroying it; without it, files are simply
-    coalesced.  The rewrite lands in a sibling dir and is swapped in
-    with two renames — a reader holding the old listing still sees
-    complete data, matching the tile store's versioned-dir discipline.
-
-    Returns {files_before, files_after, bytes}.
-    """
-    import math
-    import os
-    import shutil
-
-    data_files = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    ]
-    total = sum(os.path.getsize(f) for f in data_files)
-    n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(path)
-    if order_by:
-        cols = [F.col(c) for c in order_by]
-        out = df.repartitionByRange(n_out, *cols).sortWithinPartitions(*cols)
-    else:
-        out = df.coalesce(n_out)
-    tmp = path.rstrip("/") + ".__compact__"
-    # writer_options: e.g. parquet.block.size — row groups are the
-    # pruning granule, so fewer files must not mean coarser skipping
-    out.write.options(**(writer_options or {})).mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return {"files_before": len(data_files), "files_after": n_out, "bytes": total}
 
 
 def merge_upsert(

@@ -387,10 +387,6 @@ def build_pyramid(
     raise ValueError(f"unknown pyramid mode {mode!r}")
 
 
-def with_tile_id(pyramid: DataFrame) -> Column:
-    return tile_id_from_zrc(F.col("zoom"), F.col("row"), F.col("col"))
-
-
 def resultsets(pyramid: DataFrame, delta: int = DETAIL_ZOOM_DELTA) -> DataFrame:
     """Package detail counts under their result-set parent tile
     (reference heatmap.py:79-90,112,120-126: A2 re-key + A3 collect).

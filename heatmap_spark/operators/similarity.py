@@ -38,9 +38,9 @@ def norm_expr(a: Column) -> Column:
 
 def lit_double_arrays(nested) -> Column:
     """Nested Python lists of floats → ONE literal array expression
-    parsed from a single SQL string (r13; the fwht_rotate lesson from
-    r12 generalized): the `F.array(*[F.lit(x) …])` spelling costs one
-    py4j driver roundtrip PER ELEMENT — a trained codebook (512
+    parsed from a single SQL string (r13; see _fwht_out_j_sql): the
+    `F.array(*[F.lit(x) …])` spelling costs one py4j driver roundtrip
+    PER ELEMENT — a trained codebook (512
     doubles) or an ADC table set (5,120) is seconds of driver time per
     call site before any executor work.  One `F.expr` parse builds the
     node-identical tree (CreateArray over double Literals) in
@@ -382,35 +382,26 @@ def embedding_near_dup_pairs_df(
     threshold: float = 0.4,
     n_buckets: int = 8,
     n_assign: int = 2,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """DataFrame-core of :func:`embedding_near_dup_pairs` over any
-    (vec_id, vec) relation.
-
-    Pass a prebuilt ``assigned`` (vec_id, vec, bucket — possibly
-    multiple rows per vec_id for multi-assignment) to swap the
-    bucketing family: the default is IVF top-``n_assign``; the scale
-    probe uses :func:`hyperplane_assign` (sign-LSH), whose bucket
-    count grows exponentially in plane count with linear assignment
-    cost — the right family when n_buckets must track corpus size and
-    a literal IVF codebook would no longer embed in the plan.
+    (vec_id, vec) relation: each vector goes to its ``n_assign``
+    nearest IVF buckets, and only pairs sharing a bucket are scored.
 
     Norms are computed ONCE per assignment row (not per pair): the
     pair join then evaluates only the dot product, cutting the
     interpreted higher-order-function work per candidate ~3×."""
-    if assigned is None:
-        codebook = ivf_codebook(emb, n_buckets)
-        cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
-        scored_b = F.transform(
-            cents,
-            lambda c, i: F.struct(
-                (-dot_expr(F.col("vec"), c)).alias("neg_aff"), i.alias("b")
-            ),
-        )
-        top = F.transform(
-            F.slice(F.array_sort(scored_b), 1, n_assign), lambda s: s["b"]
-        )
-        assigned = emb.select("vec_id", "vec", F.explode(top).alias("bucket"))
+    codebook = ivf_codebook(emb, n_buckets)
+    cents = lit_double_arrays([codebook[b] for b in sorted(codebook)])
+    scored_b = F.transform(
+        cents,
+        lambda c, i: F.struct(
+            (-dot_expr(F.col("vec"), c)).alias("neg_aff"), i.alias("b")
+        ),
+    )
+    top = F.transform(
+        F.slice(F.array_sort(scored_b), 1, n_assign), lambda s: s["b"]
+    )
+    assigned = emb.select("vec_id", "vec", F.explode(top).alias("bucket"))
     with_norm = assigned.select(
         "bucket", "vec_id", "vec", norm_expr(F.col("vec")).alias("nrm")
     )
@@ -435,30 +426,6 @@ def embedding_near_dup_pairs_df(
         .select("vec_id_a", "vec_id_b", F.round("raw", 6).alias("cosine"))
         .distinct()
     )
-
-
-def hyperplane_assign(
-    emb: DataFrame, n_planes: int = 10, dim: int = 64
-) -> DataFrame:
-    """Sign-LSH bucketing: bucket = bit-packed signs of ``n_planes``
-    fixed ±1 pseudo-random hyperplane projections (2^n_planes buckets).
-
-    The planes are deterministic integer-derived ±1 patterns, so the
-    assignment is reproducible in any engine, costs n_planes dot
-    products per vector (vs n_buckets for IVF argmax), and needs no
-    trained codebook — the bucketing family to use when bucket count
-    must scale with corpus size.  Collision probability for a pair at
-    angle θ is (1 − θ/π)^n_planes — near-dups (θ≈0) collide with
-    high probability."""
-    plane_sign = (
-        lambda p, j: 1.0 if ((p * 1000003 + j * 7919) % 97) % 2 else -1.0
-    )
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        plane = lit_double_arrays([plane_sign(p, j) for j in range(dim)])
-        bit = (dot_expr(F.col("vec"), plane) > 0).cast("int")
-        bucket = bucket + bit * (1 << p)
-    return emb.select("vec_id", "vec", bucket.alias("bucket"))
 
 
 def embedding_near_dup_pairs_exact(
@@ -541,35 +508,6 @@ def haversine_nearest(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame
         .where(F.col("rank") <= k)
         .select("probe", "rank", "user_id", "dist_m")
     )
-
-
-def cosine_pandas_udf():
-    """Arrow-vectorized cosine kernel (§2.7 escape-hatch parity demo).
-
-    Returns a pandas_udf computing cosine(a, b) over two array<double>
-    columns via numpy on whole Arrow batches.  The hot path everywhere
-    else uses the JVM-side sequential fold (dot_expr) — which is both
-    faster to launch and cross-engine deterministic; this exists to
-    pin the pattern for kernels that genuinely need numpy/BLAS (and
-    tests/test_similarity.py asserts the two agree).  Built as a
-    nested closure so it pickles by value (importable from any cwd).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def cos(a, b):
-        am = np.stack(a.to_numpy())
-        bm = np.stack(b.to_numpy())
-        num = (am * bm).sum(axis=1)
-        den = np.sqrt((am * am).sum(axis=1)) * np.sqrt((bm * bm).sum(axis=1))
-        return pd.Series(num / den)
-
-    # real (non-string) annotations: the module's `from __future__ import
-    # annotations` would stringify inline hints, which pyspark's
-    # type-hint parser can't resolve for locally-imported names
-    cos.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf("double")(cos)
 
 
 def trajectory_similarity(
@@ -677,13 +615,10 @@ def semantic_dedup_df(
     threshold: float = 0.4,
     n_buckets: int = 8,
     n_assign: int = 2,
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
     """DataFrame-core of :func:`semantic_dedup` over any (vec_id, vec)
-    relation; ``assigned`` swaps the bucketing family (e.g.
-    :func:`hyperplane_assign` when bucket count must track corpus
-    size)."""
-    pairs = embedding_near_dup_pairs_df(emb, threshold, n_buckets, n_assign, assigned)
+    relation."""
+    pairs = embedding_near_dup_pairs_df(emb, threshold, n_buckets, n_assign)
     dropped = pairs.select(F.col("vec_id_b").alias("vec_id")).distinct()
     flagged = dropped.withColumn("dropped", F.lit(True))
     return (
@@ -698,16 +633,6 @@ def semantic_dedup_df(
 # answer — a 64-dim float64 vector (512 B) compresses to m=8 one-byte
 # codes; the search never touches raw floats except for its own query).
 # ---------------------------------------------------------------------------
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Squared L2 distance between two equal-length arrays, sequential
-    fold (deterministic on any partitioning)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _l2_normalize(vec: Column) -> Column:
@@ -829,35 +754,6 @@ def pq_codebooks(
     return cb
 
 
-def pq_encode(
-    emb: DataFrame,
-    cb: dict[tuple[int, int], list[float]],
-    m: int = 8,
-    k: int = 16,
-    dim: int = 64,
-) -> DataFrame:
-    """(vec_id, codes array<int> of length m): map-only — the codebook
-    rides as literals, no join, no shuffle; at 100 TB this is a pure
-    scan over the corpus emitting 1/64th of its bytes."""
-    d = dim // m
-    norm = _l2_normalize(F.col("vec"))
-    cents = lit_double_arrays(
-        [[cb[(s, c)] for c in range(k)] for s in range(m)]
-    )
-
-    def code_for(s: int) -> Column:
-        sub = F.slice(norm, s * d + 1, d)
-        scored = F.transform(
-            F.element_at(cents, s + 1),
-            lambda c, i: F.struct(_sq_dist(sub, c).alias("d"), i.alias("code")),
-        )
-        return F.slice(F.array_sort(scored), 1, 1)[0]["code"].cast("int")
-
-    return emb.select(
-        "vec_id", F.array(*[code_for(s) for s in range(m)]).alias("codes")
-    )
-
-
 def pq_adc_topk(
     emb: DataFrame,
     cb: dict[tuple[int, int], list[float]],
@@ -881,8 +777,7 @@ def pq_adc_topk(
 
     Codes come from :func:`pq_encode_np` — the SAME encoder
     :func:`pq_codebooks` trains with — so train and serve can never
-    disagree on a near-tie centroid assignment (the Column encoder
-    uses a different float formula and may break ties differently).
+    disagree on a near-tie centroid assignment.
     """
     d = dim // m
     queries = [
@@ -999,21 +894,18 @@ def pq_encode_np(
     dim: int = 64,
     normalize: bool = True,
 ) -> DataFrame:
-    """Arrow-batched numpy PQ encode — the corpus-scale path.
+    """Arrow-batched numpy PQ encode: (vec_id, codes array<int> of
+    length m), each code the nearest subspace centroid (first minimum
+    on ties).
 
-    The Column spelling (:func:`pq_encode`) evaluates m·k interpreted
-    sequential folds per row; at 1M vectors that is ~10^9 interpreted
-    ops and minutes of CPU, while this kernel does the same math as
-    three numpy einsum/argmin calls per Arrow batch (measured >100x).
-    Encoding stays embarrassingly parallel and shuffle-free; the
-    codebook ships once per task inside the closure (k·dim doubles).
-    Both spellings take the first minimum (np.argmin / array_sort), so
-    codes agree up to floating-point ties: the two paths compute the
-    distance with different formulas (||c||^2 - 2 s·c here vs
-    sum((s-c)^2) in the Column form), so an assignment can diverge
-    when two centroids are within float rounding of equidistant.
-    Train and serve therefore both use THIS encoder for code
-    assignment; the Column form is the slow-path cross-check only.
+    A Column spelling would evaluate m·k interpreted sequential folds
+    per row — ~10^9 interpreted ops at 1M vectors — while this kernel
+    does the same math as three numpy einsum/argmin calls per Arrow
+    batch (measured >100x).  Encoding stays embarrassingly parallel
+    and shuffle-free; the codebook ships once per task inside the
+    closure (k·dim doubles).  Train (:func:`pq_codebooks`) and serve
+    (:func:`pq_adc_topk`, :func:`opq_adc_topk`) both assign codes
+    with THIS encoder, so they never disagree on a near-tie centroid.
     """
     import numpy as np
 
@@ -1088,53 +980,6 @@ def pq_adc_scores_np(
     return codes.mapInPandas(
         kern, "query_id bigint, neighbor_id bigint, adc_dist double"
     )
-
-
-def pq_adc_topk_np(
-    emb: DataFrame,
-    cb: dict[tuple[int, int], list[float]],
-    n_queries: int = 10,
-    topk: int = 5,
-    m: int = 16,
-    k: int = 32,
-    dim: int = 64,
-    rerank_oversample: int = 8,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """Corpus-scale PQ search: numpy encode → numpy ADC scores → top-k
-    shortlist window → exact cosine re-rank of the shortlist only.
-    Same output contract as :func:`pq_adc_topk`.
-
-    Pass precomputed ``codes`` (the production lifecycle — encode once
-    when the corpus lands, store the 16 B/vec codes, query many
-    times); when omitted the codes are encoded here and checkpointed
-    so the scoring window doesn't re-run the encoder inside its own
-    shuffle (measured: lazy re-encode tripled ADC wall time at 1M
-    vectors)."""
-    queries = [
-        (r["vec_id"], r["vec"])
-        for r in emb.where(F.col("vec_id") < n_queries)
-        .select("vec_id", _l2_normalize(F.col("vec")).alias("vec"))
-        .collect()
-    ]
-    if codes is None:
-        from pyspark.storagelevel import StorageLevel
-
-        codes = pq_encode_np(emb, cb, m, k, dim).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
-    scored = pq_adc_scores_np(codes, cb, queries, m, k, dim).where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("rank")
-        )
-        .where(F.col("rank") <= topk * rerank_oversample)
-        .select("query_id", "neighbor_id")
-    )
-    return _rerank_exact(shortlist, emb, queries, topk)
 
 
 # ---------------------------------------------------------------------------
@@ -2723,64 +2568,26 @@ def _rabitq_signs(dim: int = 64) -> list[int]:
     ]
 
 
-def fwht_rotate(vec: str, dim: int = 64) -> Column:
-    """Deterministic structured rotation x → H·D·x (sign-flip diagonal
-    D, then the unnormalized Walsh–Hadamard transform) — the
-    randomized-rotation ingredient of RaBitQ, made a fixed plan
-    constant.  H is orthogonal up to the scalar √D, which cancels in
-    every cosine/ratio the estimator forms, so no normalization pass
-    is needed.
-
-    Spelled as the FLAT matrix product (out_j = Σ_i ±(x_i·D_i) with
-    the Hadamard sign parity(popcount(j & i))), not the log-stage
-    butterfly: each butterfly stage references the previous 64-slot
-    array twice per element, and Catalyst's projection collapsing
-    inlines the reference — 2^6 copies of the chain, a measured
-    driver OOM at plan build.  The flat form is 64×64 fixed-order
-    terms and keeps the PLAN linear, but the 4096-term projection
-    still exceeds Janino's per-method limits: whole-stage codegen
-    logs an InternalCompilerException and the stage falls back to
-    interpreted execution (correct results, one noisy ERROR line).
-    That cost is real but paid ONCE — the rotated relations are
-    localCheckpoint-materialized at index build (and included in the
-    1M-vector probe figures); serving reads the materialized arrays.
-    A codegen-clean respelling is off the table on purpose: the
-    DuckDB oracle writes the identical nested-lambda sum in the
-    identical order, so every float op pairs up bitwise across
-    engines — re-associating the sum to shrink methods would break
-    the value hash.
-
-    r12 (guide §5, driver cost): the Column tree is built from ONE
-    SQL string through a single F.expr call, not ~4,096 Python
-    Column operations — each of those was a py4j driver roundtrip
-    and the build alone measured 11 s per call site.  The parsed
-    tree is node-for-node the old one (Multiply(ElementAt, double
-    literal), left-associated Adds, UnaryMinus on the negated
-    terms — verified bitwise-equal output), so the oracle hash and
-    the codegen-fallback behavior are unchanged.  ``vec`` is the NAME
-    of a plain column reference (the SQL spelling needs an identifier,
-    not an arbitrary Column — alias expressions to a column first;
-    ADVICE r12: taking the name as a str at the boundary replaces the
-    old repr(Column) parse, which leaned on a private PySpark
-    format)."""
-    if not isinstance(vec, str) or not vec.replace("_", "").isalnum():
-        raise ValueError(
-            f"fwht_rotate needs a plain column NAME (str), got {vec!r}; "
-            "alias the expression to a column first"
-        )
-    name = f"`{vec}`"
-    return F.expr(
-        "array(" + ", ".join(_fwht_out_j_sql(name, j, dim) for j in range(dim)) + ")"
-    )
-
-
 def _fwht_term_sql(name: str, i: int, signs: list[int]) -> str:
     return f"element_at({name}, {i + 1}) * {float(signs[i])}D"
 
 
 def _fwht_out_j_sql(name: str, j: int, dim: int = 64) -> str:
-    """Output coordinate j of H·D·x as a SQL string — the identical
-    left-associated fixed-order sum the Column spelling produced."""
+    """Output coordinate j of the RaBitQ rotation x → H·D·x (sign-flip
+    diagonal D, then the unnormalized Walsh–Hadamard transform) as a
+    SQL string.  H is orthogonal up to √D, which cancels in every
+    cosine/ratio the estimator forms, so no normalization is needed.
+
+    Spelled as the FLAT matrix-product row (out_j = Σ_i ±(x_i·D_i),
+    sign = parity(popcount(j & i))), not the log-stage butterfly: each
+    butterfly stage references the previous array twice per element
+    and Catalyst's projection collapsing inlines the reference — a
+    measured driver OOM at plan build.  The sum is left-associated in
+    fixed order because the DuckDB oracle writes the identical
+    nested-lambda sum: every float op pairs up bitwise across engines,
+    and re-associating it would break the value hash.  Built as SQL
+    text for one F.expr parse — the per-term Column spelling cost one
+    py4j roundtrip per term (11 s per call site, r12)."""
     signs = _rabitq_signs(dim)
     acc = None
     for i in range(dim):
@@ -2800,8 +2607,8 @@ def fwht_rotate_materialized(df: DataFrame, dim: int = 64) -> DataFrame:
     whole-stage codegen compiles them as split methods instead of
     failing on the single 4,096-term array expression and running
     interpreted), is localCheckpoint-materialized, and only then
-    assembled into the array column — same floats in the same order,
-    verified bitwise-equal to the one-expression spelling (r12).
+    assembled into the array column — same floats in the same order
+    as a single array expression (verified bitwise-equal, r12).
     Other columns of ``df`` ride along untouched."""
     other = [c for c in df.columns if c != "vec"]
     cols = [
@@ -2816,7 +2623,7 @@ def fwht_rotate_materialized(df: DataFrame, dim: int = 64) -> DataFrame:
 def rabitq_codes(emb: DataFrame) -> DataFrame:
     """RaBitQ-style EXTENDED binary codes (Gao & Long, SIGMOD 2024):
     rotate each vector with the deterministic H·D rotation
-    (:func:`fwht_rotate`), then store the 1-bit sign words plus the
+    (:func:`fwht_rotate_materialized`), then store the 1-bit sign words plus the
     two floats the asymmetric estimator needs — ``nn`` = ‖Rv‖ and
     ``sum_abs`` = Σ|Rv_i| = ⟨sign(Rv), Rv⟩.  Their ratio is the
     paper's per-vector correction ⟨v̄, v̂⟩ = Σ|Rv_i| / (√D·‖Rv‖): how
@@ -2886,7 +2693,7 @@ def knn_rabitq_rerank(
     shortlist·n_queries originals via an id equi-join.
 
     Both sides are rotated with the deterministic H·D rotation
-    (fwht_rotate) before quantization/scoring — the paper's
+    (fwht_rotate_materialized) before quantization/scoring — the paper's
     distribution-robustness ingredient, without which the correction
     factor's cross-vector variance makes the estimator WORSE than
     Hamming on clustered data (measured; see rabitq_codes).  The

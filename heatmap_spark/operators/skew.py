@@ -1,55 +1,18 @@
-"""Skew-mitigation patterns for hot keys at 100 TB.
+"""Skew mitigation for hot keys at 100 TB: the salted equi-join.
 
-AQE handles skewed *joins* automatically; skewed *aggregations* with
-high-cardinality accumulators (collect_list/collect_set per hot key)
-still need salting: phase 1 aggregates (key, salt) partial results so a
-hot key spreads over N reducers, phase 2 merges the N partials.  For
-algebraic aggregates (sum/count) Spark's own partial aggregation makes
-salting unnecessary — this module exists for the non-algebraic cases
-and as the documented pattern.
+AQE splits skewed join partitions on its own; :func:`salted_join` is
+the manual fallback for the cases it cannot reach.  Skewed algebraic
+aggregations (sum/count) need no salting — Spark's partial aggregation
+already spreads a hot key before the shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heatmap_spark.functions.exact import dec
 from heatmap_spark.sources.tables import load_table
-
-
-def salted_sum(
-    df: DataFrame, keys: list[str], value: Column | str, out: str, n_salts: int = 16
-) -> DataFrame:
-    """Two-phase salted sum: identical result to a direct groupBy, but a
-    hot key's rows spread across ``n_salts`` phase-1 reducers.
-
-    The salt must be deterministic per row for reproducibility —
-    derived by hashing the whole row's value column + a row-local
-    component rather than rand() (rand() breaks retry semantics: a
-    re-executed task would re-salt differently mid-shuffle).
-    """
-    value = F.col(value) if isinstance(value, str) else value
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(k) for k in keys], value), F.lit(n_salts))
-    )
-    phase1 = salted.groupBy(*keys, "__salt").agg(F.sum(value).alias("__partial"))
-    return phase1.groupBy(*keys).agg(F.sum("__partial").alias(out))
-
-
-def salted_collect_set(
-    df: DataFrame, keys: list[str], value: str, out: str, n_salts: int = 16
-) -> DataFrame:
-    """Two-phase salted collect_set (the genuinely skew-prone case:
-    per-key set accumulation).  Phase 1 builds per-salt sets, phase 2
-    merges with array_distinct(flatten(...)) and sorts for determinism."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.col(value)), F.lit(n_salts))
-    )
-    phase1 = salted.groupBy(*keys, "__salt").agg(F.collect_set(value).alias("__s"))
-    return phase1.groupBy(*keys).agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("__s")))).alias(out)
-    )
 
 
 def salted_join(

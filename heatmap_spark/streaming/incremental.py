@@ -121,25 +121,6 @@ def streaming_tumbling_counts(
     )
 
 
-def streaming_sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Sliding (hopping) window counts: each event lands in
-    window/slide overlapping windows (2 here).  Spark expands the event
-    into its covering windows before the aggregation — the state store
-    holds one row per (window, event_type), and the watermark evicts
-    windows whose end < max(ts) - watermark exactly as for tumbling."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
 def streaming_session_stats(
     events: DataFrame, gap: str = "60 minutes", watermark: str = "2 hours"
 ) -> DataFrame:

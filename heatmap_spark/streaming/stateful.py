@@ -58,60 +58,6 @@ def running_user_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def per_user_type_counts_tws(events: DataFrame) -> DataFrame:
-    """Per-(user, event_type) running counts via Spark 4's
-    transformWithStateInPandas — the successor API to
-    applyInPandasWithState, with typed composite state (here MapState
-    keyed by event_type) instead of a single state tuple.
-
-    GATED: the TWS Python state server requires ``google.protobuf``,
-    which this environment does not ship; we raise before starting a
-    stream that would crash its worker.  The operator body below is the
-    real implementation and runs wherever protobuf is installed; the
-    applyInPandasWithState path (``running_user_counts``) provides the
-    same capability class ungated.
-    """
-    import importlib.util
-
-    if importlib.util.find_spec("google") is None or importlib.util.find_spec(
-        "google.protobuf"
-    ) is None:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf in the Python "
-            "workers (absent here); use running_user_counts "
-            "(applyInPandasWithState) instead"
-        )
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class TypeCounts(StatefulProcessor):  # nested: serialize by value
-        def init(self, handle):
-            self.counts = handle.getMapState("counts", "event_type string", "cnt bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            for pdf in rows:
-                for et, n in pdf.groupby("event_type").size().items():
-                    prev = (
-                        self.counts.getValue((et,))
-                        if self.counts.containsKey((et,))
-                        else None
-                    )
-                    self.counts.updateValue((et,), ((prev[0] if prev else 0) + int(n),))
-            out = [(user_id, k[0], v[0]) for k, v in self.counts.iterator()]
-            yield pd.DataFrame(out, columns=["user_id", "event_type", "n_events"])
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeCounts(),
-        outputStructType="user_id bigint, event_type string, n_events bigint",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 FUNNEL_OUTPUT_SCHEMA = (
     "user_id bigint, first_view timestamp, first_click timestamp, "
     "first_purchase timestamp"

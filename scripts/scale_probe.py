@@ -167,31 +167,25 @@ def probe_knn(spark, n: int) -> None:
 
 
 def probe_neardup(spark, n: int) -> None:
-    """Bucketed embedding near-dup at n vectors (default 100k), using
-    the sign-LSH bucketing family: bucket count scales exponentially
-    in plane count (here ~n/64 buckets) with linear assignment cost,
-    so the pair join is quadratic only within a block, never
-    globally — the family the IVF literal codebook hands over to when
-    n_buckets must track corpus size."""
+    """Bucketed embedding near-dup at n vectors (default 100k) with the
+    IVF top-2 multi-assignment, n_buckets ~ sqrt(n) so each block stays
+    bounded: the pair join is quadratic only within a block, never
+    globally."""
     import math
 
-    from heatmap_spark.operators.similarity import (
-        embedding_near_dup_pairs_df,
-        hyperplane_assign,
-    )
+    from heatmap_spark.operators.similarity import embedding_near_dup_pairs_df
 
     emb = synthetic_dup_embeddings(spark, n)
     emb.count()  # warm
-    n_planes = max(6, int(math.log2(max(n, 2) / 64)))
+    n_buckets = max(8, math.isqrt(n))
     t0 = time.perf_counter()
-    assigned = hyperplane_assign(emb, n_planes=n_planes)
     pairs = embedding_near_dup_pairs_df(
-        emb, threshold=0.99, assigned=assigned
+        emb, threshold=0.99, n_buckets=n_buckets
     ).count()
     dt = time.perf_counter() - t0
     planted = n // 13
     print(
-        f"embedding-near-dup {n:,} vecs, 2^{n_planes} sign-LSH buckets:"
+        f"embedding-near-dup {n:,} vecs, {n_buckets} IVF buckets:"
         f" {dt:.1f}s = {n / dt / 1000:.0f}k vecs/s,"
         f" {pairs:,} pairs >= 0.99 (planted {planted:,})"
     )
@@ -425,20 +419,18 @@ def probe_passages(spark, n: int) -> None:
 
 
 def probe_semdedup(spark, n: int) -> None:
-    """semantic_dedup at scale with the sign-LSH bucket family (bucket
-    count tracks corpus size): every 13th vector is a perturbed copy of
-    its predecessor, so ~n/13 vectors must be dropped."""
-    from heatmap_spark.operators.similarity import (
-        hyperplane_assign,
-        semantic_dedup_df,
-    )
+    """semantic_dedup at scale with the IVF top-2 multi-assignment,
+    n_buckets ~ sqrt(n): every 13th vector is a perturbed copy of its
+    predecessor, so ~n/13 vectors must be dropped."""
+    import math
+
+    from heatmap_spark.operators.similarity import semantic_dedup_df
 
     emb = synthetic_dup_embeddings(spark, n)
     emb.count()  # warm
     t0 = time.perf_counter()
-    assigned = hyperplane_assign(emb, n_planes=10)
     dropped = (
-        semantic_dedup_df(emb, threshold=0.99, assigned=assigned)
+        semantic_dedup_df(emb, threshold=0.99, n_buckets=max(8, math.isqrt(n)))
         .where(~F.col("keep"))
         .count()
     )
@@ -649,7 +641,7 @@ def probe_pq(spark, n: int) -> None:
     from pyspark.sql import functions as F
 
     from heatmap_spark.operators.similarity import (
-        pq_adc_topk_np,
+        pq_adc_topk,
         pq_codebooks,
         pq_encode_np,
     )
@@ -664,7 +656,7 @@ def probe_pq(spark, n: int) -> None:
     n_codes = pq_encode_np(emb, cb, m, k).count()
     t_enc = time.perf_counter() - t0
     t0 = time.perf_counter()
-    top = pq_adc_topk_np(emb, cb, n_queries=10, topk=5, m=m, k=k, rerank_oversample=8)
+    top = pq_adc_topk(emb, cb, n_queries=10, topk=5, m=m, k=k, rerank_oversample=8)
     rows = top.where(F.col("rank") == 1).collect()
     t_q = time.perf_counter() - t0
     # queries 0..9: vec 13k's twin is 13k... here twins are (i-1, i) with
@@ -684,18 +676,15 @@ def probe_opq(spark, n: int) -> None:
     dim x dim cross-matrix pass + driver-side SVD), then map-only
     rotate+encode of the full corpus at 8 B/vec (64x compression) and
     ADC top-5 + exact re-rank."""
-    import numpy as np
     from pyspark.sql import functions as F
 
     from heatmap_spark.operators.similarity import (
+        opq_adc_topk,
         opq_train,
-        pq_adc_scores_np,
         pq_encode_np,
         rotate_vectors,
         _l2_normalize,
-        _rerank_exact,
     )
-    from pyspark.sql.window import Window as W
     from pyspark.storagelevel import StorageLevel
 
     m, k = 8, 32
@@ -714,21 +703,9 @@ def probe_opq(spark, n: int) -> None:
     n_codes = codes.count()
     t_enc = time.perf_counter() - t0
     t0 = time.perf_counter()
-    Rm = np.asarray(R)
-    raw_queries = [
-        (r["vec_id"], r["vec"]) for r in nv.where(F.col("vec_id") < 10).collect()
-    ]
-    rot_queries = [(qid, list(np.asarray(qv) @ Rm)) for qid, qv in raw_queries]
-    scored = pq_adc_scores_np(codes, cb, rot_queries, m, k).where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.select("query_id", "neighbor_id", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= 40)
-        .select("query_id", "neighbor_id")
-    )
-    n_top = _rerank_exact(shortlist, emb, raw_queries, 5).count()
+    n_top = opq_adc_topk(
+        emb, R, cb, n_queries=10, topk=5, m=m, k=k, rerank_oversample=8, codes=codes
+    ).count()
     t_q = time.perf_counter() - t0
     print(
         f"OPQ {n:,} vecs: train {t_train:.1f}s (100k sample, 3 OPQ iters), "
@@ -2671,13 +2648,14 @@ def probe_binaryann(spark, n: int) -> None:
     from functools import reduce
     from operator import add
 
-    from heatmap_spark.operators.similarity import fwht_rotate, rabitq_codes
+    from heatmap_spark.operators.similarity import (
+        fwht_rotate_materialized,
+        rabitq_codes,
+    )
 
     rcodes = rabitq_codes(emb).localCheckpoint(eager=True)
     rqvec = (
-        emb.where(F.col("vec_id") < 10)
-        .select("vec_id", fwht_rotate("vec").alias("vec"))
-        .localCheckpoint(eager=True)
+        fwht_rotate_materialized(emb.where(F.col("vec_id") < 10).select("vec_id", "vec"))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("vec").alias("qvec"),

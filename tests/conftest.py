@@ -40,7 +40,6 @@ def sf_correct():
 SLOW_TESTS = {
     "tests/test_advanced_ops.py::test_connected_components_converges_on_star_and_cycle",
     "tests/test_advanced_ops.py::test_negative_sampling_validity",
-    "tests/test_advanced_ops.py::test_salted_sum_equals_plain_groupby",
     "tests/test_advanced_ops.py::test_udtf_ngrams_matches_native",
     "tests/test_advanced_ops.py::test_url_canonicalization_collapses_variants",
     "tests/test_api.py::test_cli_drift_and_resolve_subcommands",
@@ -53,7 +52,6 @@ SLOW_TESTS = {
     "tests/test_kll_store.py::test_binning_timeline_survives_compaction_and_guards",
     "tests/test_kll_store.py::test_served_mwu_within_sketch_bound",
     "tests/test_kll_store.py::test_served_w1_within_sketch_bound",
-    "tests/test_layout.py::test_compact_parquet_restores_clustering",
     "tests/test_oracle.py::test_oracle_match[q_curation_full]",
     "tests/test_oracle.py::test_oracle_match[q_duplicated_passages]",
     "tests/test_oracle.py::test_oracle_match[q_hash_walks]",
@@ -123,7 +121,6 @@ SLOW_TESTS = {
     "tests/test_graph_store.py::test_pre_norms_store_migrates_transparently",
     "tests/test_graph_store.py::test_search_recall_vs_exact",
     "tests/test_joinview.py::test_join_view_exactly_once_for_arbitrary_splits",
-    "tests/test_layout.py::test_hilbert_layout_skips_row_groups",
     "tests/test_media_kernels.py::test_bad_kernel_fails_loudly",
     "tests/test_media_kernels.py::test_injected_kernel_identical_output[media_decode_jpeg-decode]",
     "tests/test_media_kernels.py::test_video_frame_kernel_identical_output",

@@ -1,24 +1,11 @@
-"""Tests for the advanced-operator layer: salted aggregation, connected
+"""Tests for the advanced-operator layer: salted join, connected
 components, stateful streaming."""
 
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.dedup import connected_components
-from heatmap_spark.operators.skew import salted_collect_set, salted_join, salted_sum
+from heatmap_spark.operators.skew import salted_join
 from heatmap_spark.sources.tables import load_table
-
-
-def test_salted_sum_equals_plain_groupby(spark, sf_smoke):
-    li = load_table(spark, sf_smoke, "lineitem")
-    got = {
-        r.l_returnflag: r.total
-        for r in salted_sum(li, ["l_returnflag"], F.col("l_quantity"), "total").collect()
-    }
-    exp = {
-        r.l_returnflag: r.total
-        for r in li.groupBy("l_returnflag").agg(F.sum("l_quantity").alias("total")).collect()
-    }
-    assert got == exp
 
 
 def test_salted_join_equals_plain_join(spark, sf_smoke):
@@ -34,19 +21,6 @@ def test_salted_join_equals_plain_join(spark, sf_smoke):
         (r.l_suppkey, r.l_quantity, r.s_nationkey)
         for r in li.join(sup, "l_suppkey").collect()
     )
-    assert got == exp
-
-
-def test_salted_collect_set_equals_plain(spark, sf_smoke):
-    ev = load_table(spark, sf_smoke, "events")
-    got = {
-        r.event_type: list(r.users)
-        for r in salted_collect_set(ev, ["event_type"], "user_id", "users").collect()
-    }
-    exp = {
-        r.event_type: sorted(r.users)
-        for r in ev.groupBy("event_type").agg(F.collect_set("user_id").alias("users")).collect()
-    }
     assert got == exp
 
 

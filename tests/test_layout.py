@@ -70,40 +70,6 @@ def test_zorder_layout_skips_row_groups(spark, sf_correct, tmp_path):
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
-def test_compact_parquet_restores_clustering(spark, sf_correct, tmp_path):
-    from heatmap_spark.operators.layout import compact_parquet
-
-    loc = load_locations(spark, sf_correct).where(F.col("source") != "background")
-    tiles = loc.select(
-        tl.tile_row("latitude", 14).alias("row"),
-        tl.tile_col("longitude", 14).alias("col"),
-        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("copy"),
-    ).withColumn("zkey", z_value("row", "col", 14))
-    d = str(tmp_path / "frag")
-    # simulate incremental accretion: many tiny unclustered files
-    tiles.repartition(32).write.parquet(d)
-    n_before = spark.read.parquet(d).count()
-    stats = compact_parquet(
-        spark,
-        d,
-        target_bytes=1 * 1024 * 1024,
-        order_by=("zkey",),
-        writer_options={"parquet.block.size": str(64 * 1024)},
-    )
-    assert stats["files_before"] == 32
-    assert stats["files_after"] < 8
-    after = spark.read.parquet(d)
-    assert after.count() == n_before
-    # content identical to the source relation (old listing is gone)
-    assert after.select(*tiles.columns).exceptAll(tiles).isEmpty()
-    assert tiles.exceptAll(after.select(*tiles.columns)).isEmpty()
-    # clustering repaired: a bbox prunes row groups again
-    n = 2**14
-    rr = cc = (3 * n // 8, 4 * n // 8)
-    zed = row_group_skip_stats(d, row_range=rr, col_range=cc)
-    assert zed["fraction"] < 0.6, zed
-
-
 def test_hilbert_key_matches_reference_and_is_continuous(spark):
     """The fold-based Hilbert key equals the textbook xy2d on the full
     8x8 grid, is bijective, and consecutive keys are ALWAYS adjacent
@@ -149,42 +115,3 @@ def test_hilbert_key_matches_reference_and_is_continuous(spark):
         for d in range(63)
     ]
     assert max(morton_jumps) > 1
-
-
-def test_hilbert_layout_skips_row_groups(spark, sf_correct, tmp_path):
-    """The Hilbert layout prunes a centered bbox at least as well as
-    arrival order by a wide margin and is content-identical; compare
-    its pruning against z-order on the same data (informational bound:
-    within 1.5x of z-order's fraction — the curves trade locality on
-    specific bboxes, but neither should collapse)."""
-    from heatmap_spark.operators.layout import (
-        cluster_by_hilbert,
-        cluster_by_zorder,
-        row_group_skip_stats,
-    )
-
-    loc = load_locations(spark, sf_correct).where(F.col("source") != "background")
-    tiles = loc.select(
-        tl.tile_row("latitude", 14).alias("row"),
-        tl.tile_col("longitude", 14).alias("col"),
-        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("copy"),
-        "user_id",
-    )
-    h_dir = str(tmp_path / "hilbert")
-    z_dir = str(tmp_path / "zorder")
-    opts = {"parquet.block.size": str(64 * 1024)}
-    cluster_by_hilbert(tiles, bits=14, num_partitions=4).write.options(**opts).parquet(h_dir)
-    cluster_by_zorder(tiles, bits=14, num_partitions=4).write.options(**opts).parquet(z_dir)
-
-    n = 2**14
-    rr = (3 * n // 8, 4 * n // 8)
-    cc = (3 * n // 8, 4 * n // 8)
-    hil = row_group_skip_stats(h_dir, row_range=rr, col_range=cc)
-    zed = row_group_skip_stats(z_dir, row_range=rr, col_range=cc)
-    assert hil["row_groups"] > 4, hil
-    assert hil["fraction"] < 0.5, hil
-    assert hil["fraction"] <= 1.5 * zed["fraction"] + 0.05, (hil, zed)
-
-    a = spark.read.parquet(h_dir).groupBy("row", "col").count()
-    b = spark.read.parquet(z_dir).groupBy("row", "col").count()
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

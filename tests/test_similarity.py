@@ -43,38 +43,6 @@ def test_ivf_results_are_subset_quality(spark, sf_smoke):
         assert abs(brute[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
 
 
-def test_cosine_pandas_udf_matches_fold(spark, sf_smoke):
-    """The Arrow-vectorized numpy kernel and the JVM sequential fold
-    must agree to float tolerance (order of additions differs)."""
-    from pyspark.sql import functions as F
-
-    from heatmap_spark.operators.similarity import (
-        cosine_pandas_udf,
-        dot_expr,
-        norm_expr,
-    )
-    from heatmap_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_smoke, "embeddings").limit(64)
-    a = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    b = a.select(
-        F.col("vec_id").alias("vec_id_b"), F.col("v").alias("w")
-    ).where(F.col("vec_id_b") < 8)
-    pairs = a.crossJoin(b)
-    cos = cosine_pandas_udf()
-    both = pairs.select(
-        "vec_id",
-        "vec_id_b",
-        (dot_expr(F.col("v"), F.col("w")) / (norm_expr(F.col("v")) * norm_expr(F.col("w")))).alias("jvm"),
-        cos(F.col("v"), F.col("w")).alias("py"),
-    ).collect()
-    assert both
-    for r in both:
-        assert abs(r.jvm - r.py) < 1e-9
-
-
 def test_kmeans_training_improves_ivf_recall(spark, sf_correct):
     """Lloyd iterations on the seed codebook must improve (deterministic
     fixture: 0.22 -> 0.40 recall@5 at sf0.01) — and every vector stays
@@ -200,7 +168,7 @@ def test_pq_roundtrip_and_recall(spark, sf_correct):
 
     from heatmap_spark.operators.similarity import (
         pq_codebooks,
-        pq_encode,
+        pq_encode_np,
         pq_recall,
     )
     from heatmap_spark.sources.tables import load_table
@@ -212,10 +180,10 @@ def test_pq_roundtrip_and_recall(spark, sf_correct):
     cb = pq_codebooks(emb, m, k, train_iters=1)
     assert set(cb) == {(s, c) for s in range(m) for c in range(k)}
     assert all(len(v) == 64 // m for v in cb.values())
-    codes = pq_encode(emb, cb, m, k)
+    codes = pq_encode_np(emb, cb, m, k)
     row = codes.first()
     assert len(row.codes) == m and all(0 <= c < k for c in row.codes)
-    again = pq_encode(emb, cb, m, k)
+    again = pq_encode_np(emb, cb, m, k)
     assert codes.exceptAll(again).isEmpty()
     # the registry pin: raises if recall@5 < 0.7
     out = pq_recall(spark, sf_correct).collect()[0]

@@ -95,49 +95,6 @@ def test_streaming_session_window_counts(spark, sf_smoke):
     assert got_u == exp_u
 
 
-def test_tws_operator_gates_cleanly(spark, sf_smoke):
-    """transformWithStateInPandas needs google.protobuf in workers; on
-    environments without it the operator must refuse up front instead
-    of crashing a started stream.  (Where protobuf exists, the stream
-    must match the batch group-by — asserted in that branch.)"""
-    import importlib.util
-
-    import pytest
-
-    from heatmap_spark.streaming import incremental as S
-    from heatmap_spark.streaming.stateful import per_user_type_counts_tws
-
-    has_pb = (
-        importlib.util.find_spec("google") is not None
-        and importlib.util.find_spec("google.protobuf") is not None
-    )
-    ev = S.read_events_stream(spark, sf_smoke)
-    if not has_pb:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            per_user_type_counts_tws(ev)
-        return
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    st = per_user_type_counts_tws(ev)
-    q = (
-        st.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    from heatmap_spark.sources.tables import load_table
-
-    exp = load_table(spark, sf_smoke, "events").groupBy("user_id", "event_type").count()
-    got = spark.table("tws_sink")
-    assert got.join(exp, ["user_id", "event_type"]).where("n_events <> count").count() == 0
-    assert got.count() == exp.count()
-
-
 def test_streaming_funnel_converges_to_batch(spark, sf_smoke):
     """Single-microbatch streaming funnel state == batch funnel counts."""
     from pyspark.sql import functions as F
