@@ -5,19 +5,20 @@ typed metadata struct; decode / feature-extraction / resize / frame
 sampling run as Arrow-batched ``mapInPandas`` operators so the payload
 bytes never round-trip through row-at-a-time Python.
 
-External codec libraries (PIL/librosa/ffmpeg) are NOT in this
-container, so the GENERIC decode kernel is stubbed:
-``decode_stub_features`` computes deterministic fake features (byte
-stats) and ``decode_real`` raises NotImplementedError unless a codec
-import succeeds.  PNG, however, needs only stdlib zlib — so this
-module carries a REAL PNG grayscale codec (:func:`png_encode` /
-:func:`png_decode`, RFC 2083 structure: chunk framing with CRCs, all
-five scanline filters) and a real decode operator
-(:func:`decode_png_features`) running in the same Arrow-batched
-mapInPandas shape as the stub — swap-in proof that the plumbing holds
-for real pixel work.  Everything Spark-side — schema, batch
-iteration, partitioning, explode of sampled frames — is real and
-tested (tests/test_multimodal.py).
+The codecs need no external library (PIL/librosa/ffmpeg): each is
+written from its format spec in stdlib + numpy.  There is one PNG
+codec (:func:`png_encode` / :func:`png_decode`: gray/RGB at depth
+8/16, palette-8, sequential and Adam7, all five scanline filters,
+CRC-checked chunks), plus JPEG (baseline + progressive), WAV,
+AVI/MJPEG, GIF and BMP; :func:`decode_real` content-sniffs all six,
+and ``decode_stub_features`` is the deterministic fake decode of the
+stub media table.  Every documents-driven fixture and decode operator
+runs through one per-document map (:func:`_per_doc`): one
+Arrow-batched mapInPandas over the documents table with a closure per
+document — the narrow boundary the ``kernel=`` swap points rely on.
+Everything Spark-side — schema, batch iteration, partitioning,
+explode of sampled frames — is real and tested
+(tests/test_multimodal.py).
 
 Throughput ceiling, measured (`scripts/scale_probe.py codec`): the
 from-scratch Python T.81 kernel decodes ~2,300 MJPEG frames/s ≈
@@ -31,8 +32,11 @@ already the one the native kernel keeps.
 
 from __future__ import annotations
 
+import hashlib
+import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +69,52 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _per_doc(spark: SparkSession, sf_dir: str, schema: str, rows) -> DataFrame:
+    """The one documents → per-document kernel map: one Arrow-batched
+    mapInPandas over ``documents`` that calls ``rows(doc_id, buf)``
+    with each document's utf-8 bytes (a uint8 ndarray) and emits the
+    tuples it returns as rows of ``schema``.  ``rows`` must be a
+    closure so cloudpickle ships it by value (see
+    :func:`_decode_real_factory`)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    cols = spark.createDataFrame([], schema).columns
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                buf = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
+                out.extend(rows(int(doc_id), buf))
+            yield pd.DataFrame.from_records(out, columns=cols)
+
+    return docs.mapInPandas(batches, schema=schema)
+
+
+def _digest_factory():
+    """``sum_and_csv_md5(vals)`` → (Σvals, md5 of the comma-joined
+    decimal values): the byte-exact digest of a decoded integer raster
+    or sample array that the DuckDB oracles replay.  A closure, so
+    kernels that call it ship it by value."""
+
+    def sum_and_csv_md5(vals):
+        flat = np.asarray(vals).reshape(-1)
+        csv = ",".join(map(str, flat.tolist()))
+        return int(flat.sum(dtype="int64")), hashlib.md5(csv.encode()).hexdigest()
+
+    return sum_and_csv_md5
+
+
+_sum_and_csv_md5 = _digest_factory()
+
+
+def _analytic_palette(a: int, b: int, c: int) -> np.ndarray:
+    """The fixtures' 64-entry palette i → (a·i, b·i, c·i) mod 256."""
+    i = np.arange(64, dtype=np.int64)
+    return np.stack(
+        [(i * a) % 256, (i * b) % 256, (i * c) % 256], axis=1
+    ).astype(np.uint8)
+
+
 def _decode_real_factory(png_dec, jdec, wdec, ablobs, gdec=None, bdec=None):
     """Builds the content-sniffing decoder as a CLOSURE over the codec
     functions (themselves closure products) so Spark kernels that
@@ -75,8 +125,8 @@ def _decode_real_factory(png_dec, jdec, wdec, ablobs, gdec=None, bdec=None):
 
     def decode_real(payload: bytes):
         """Best-effort real decode by content sniffing: PNG, JPEG
-        (baseline + progressive, subsampled), WAV, and AVI/MJPEG
-        decode through the native stdlib codecs in this module (no
+        (baseline + progressive, subsampled), WAV, AVI/MJPEG, GIF and
+        BMP decode through the native stdlib codecs in this module (no
         external library); other container formats (MP3/MP4/WEBP/...)
         still require PIL/librosa/ffmpeg and raise until one is
         installed."""
@@ -273,23 +323,40 @@ def media_frames(spark: SparkSession, sf_dir: str, n_frames: int = 4) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Real PNG codec (stdlib-only: zlib + struct).  Grayscale 8-bit,
-# single IDAT, all five scanline filter types — enough to prove the
-# decode path end-to-end without PIL.
+# PNG codec (stdlib-only: zlib + struct).  One codec for every mode the
+# engine reads or writes: gray/RGB at depth 8/16, palette-8, and both
+# interlace methods (sequential, Adam7); all five scanline filters.
 # ---------------------------------------------------------------------------
 
 def _png_codec():
-    """Build the (encode, decode) pair as SELF-CONTAINED closures —
-    nested so cloudpickle ships them to executors by VALUE (a
-    module-level def would pickle by reference and break when the
-    driver imports this package from a foreign cwd; see the repo
-    verify notes on mapInPandas closures)."""
+    """(encode, decode) for PNG (RFC 2083) covering color type 0
+    (grayscale) and 2 (RGB truecolor) at bit depths 8 and 16, color
+    type 3 (palette, depth 8) with a PLTE chunk, and BOTH interlace
+    methods (0 = sequential, 1 = Adam7) — CRC-checked chunk framing,
+    byte-level filters with a bpp-stride 'left' per §6 (the encoder
+    cycles filter type r % 5, so a decoder must invert all five), and
+    seven independently-filtered reduced images per §8.5.  Nested for
+    by-value pickling like every codec here.
+
+    encode(pixels, palette=None, interlace=0): (h, w) → gray, (h, w,
+    3) → RGB; uint8 → depth 8, uint16 → depth 16 (big-endian samples
+    per the spec).  With ``palette`` (an (n≤256, 3) uint8 array),
+    ``pixels`` is an (h, w) uint8 INDEX raster → color type 3.
+    decode(data) → (height, width, channels, depth, ndarray); palette
+    images come back EXPANDED to an (h, w, 3) uint8 raster (channels
+    3) — the form every downstream feature/phash/resize kernel wants.
+    """
     import struct
     import zlib as _z
 
     import numpy as np
 
     SIG = b"\x89PNG\r\n\x1a\n"
+    # Adam7 pass grid: (x0, y0, dx, dy) per RFC 2083 §8.5
+    ADAM7 = (
+        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+    )
 
     def chunk(tag: bytes, payload: bytes) -> bytes:
         return (
@@ -299,30 +366,41 @@ def _png_codec():
             + struct.pack(">I", _z.crc32(tag + payload) & 0xFFFFFFFF)
         )
 
-    def encode(pixels) -> bytes:
-        """(h, w) uint8 grayscale array → real PNG bytes.  Scanline
-        filters cycle 0..4 by row (None/Sub/Up/Average/Paeth) so a
-        decoder must implement every filter to round-trip."""
-        px = np.asarray(pixels, dtype=np.uint8)
-        h, w = px.shape
+    def _row_bytes(px, depth):
+        # (h, rb) int64 byte matrix, big-endian sample order
+        h = px.shape[0]
+        if depth == 8:
+            return px.reshape(h, -1).astype(np.int64)
+        hi = (px.reshape(h, -1) >> 8) & 0xFF
+        lo = px.reshape(h, -1) & 0xFF
+        out = np.empty((h, hi.shape[1] * 2), dtype=np.int64)
+        out[:, 0::2] = hi
+        out[:, 1::2] = lo
+        return out
+
+    def _shift(row, bpp):
+        return np.concatenate((np.zeros(bpp, dtype=np.int64), row[:-bpp]))
+
+    def _filter_block(rows, bpp):
+        # One independently-filtered scanline block (the whole image,
+        # or one Adam7 pass): prior starts at zero, filter type cycles
+        # r % 5 to exercise all five.
         raw = bytearray()
-        prior = np.zeros(w, dtype=np.int64)
-        for r in range(h):
-            cur = px[r].astype(np.int64)
+        prior = np.zeros(rows.shape[1], dtype=np.int64)
+        for r in range(rows.shape[0]):
+            cur = rows[r]
             ft = r % 5
+            left = _shift(cur, bpp)
             if ft == 0:
                 filt = cur
-            elif ft == 1:  # Sub: left neighbor
-                left = np.concatenate(([0], cur[:-1]))
+            elif ft == 1:  # Sub
                 filt = (cur - left) % 256
-            elif ft == 2:  # Up: prior row
+            elif ft == 2:  # Up
                 filt = (cur - prior) % 256
             elif ft == 3:  # Average
-                left = np.concatenate(([0], cur[:-1]))
                 filt = (cur - (left + prior) // 2) % 256
             else:  # Paeth
-                left = np.concatenate(([0], cur[:-1]))
-                ul = np.concatenate(([0], prior[:-1]))
+                ul = _shift(prior, bpp)
                 p = left + prior - ul
                 pa, pb, pc = np.abs(p - left), np.abs(p - prior), np.abs(p - ul)
                 pred = np.where(
@@ -332,63 +410,32 @@ def _png_codec():
             raw.append(ft)
             raw.extend(filt.astype(np.uint8).tobytes())
             prior = cur
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)  # 8-bit gray
-        return (
-            SIG
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", _z.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
+        return raw
 
-    def decode(data: bytes):
-        """Grayscale 8-bit PNG bytes → (h, w, uint8 pixel ndarray):
-        parse the chunk stream (validating signature and CRCs),
-        inflate IDAT, invert the five scanline filters."""
-        if data[:8] != SIG:
-            raise ValueError("not a PNG: bad signature")
-        pos, w = 8, None
-        idat = bytearray()
-        while pos < len(data):
-            (ln,) = struct.unpack(">I", data[pos : pos + 4])
-            tag = data[pos + 4 : pos + 8]
-            payload = data[pos + 8 : pos + 8 + ln]
-            (crc,) = struct.unpack(">I", data[pos + 8 + ln : pos + 12 + ln])
-            if _z.crc32(tag + payload) & 0xFFFFFFFF != crc:
-                raise ValueError(f"bad CRC in {tag!r} chunk")
-            if tag == b"IHDR":
-                w, h, depth, color, comp, filt, ilace = struct.unpack(
-                    ">IIBBBBB", payload
-                )
-                if (depth, color, comp, filt, ilace) != (8, 0, 0, 0, 0):
-                    raise ValueError("only 8-bit grayscale non-interlaced PNG")
-            elif tag == b"IDAT":
-                idat.extend(payload)
-            elif tag == b"IEND":
-                break
-            pos += 12 + ln
-        if w is None:
-            raise ValueError("missing IHDR")
-        raw = np.frombuffer(_z.decompress(bytes(idat)), dtype=np.uint8)
-        if len(raw) != h * (w + 1):
-            raise ValueError("scanline payload length mismatch")
-        rows = raw.reshape(h, w + 1)
-        out = np.zeros((h, w), dtype=np.int64)
-        prior = np.zeros(w, dtype=np.int64)
-        for r in range(h):
+    def _unfilter_block(rows, bpp):
+        # Inverse of _filter_block: (n, rb+1) uint8 → (n, rb) int64.
+        n, rbp = rows.shape
+        rb = rbp - 1
+        out = np.zeros((n, rb), dtype=np.int64)
+        prior = np.zeros(rb, dtype=np.int64)
+        for r in range(n):
             ft, filt = int(rows[r, 0]), rows[r, 1:].astype(np.int64)
             if ft == 0:
                 cur = filt
             elif ft == 2:
                 cur = (filt + prior) % 256
             elif ft == 1:
-                # recon[i] = filt[i] + recon[i-1]: cumulative sum mod 256
-                cur = np.cumsum(filt) % 256
+                # recon[i] = filt[i] + recon[i-bpp]: independent
+                # cumsum chains per byte offset mod bpp
+                cur = np.empty(rb, dtype=np.int64)
+                for o in range(bpp):
+                    cur[o::bpp] = np.cumsum(filt[o::bpp]) % 256
             else:
-                cur = np.zeros(w, dtype=np.int64)
-                left = 0
-                for i in range(w):
+                cur = np.zeros(rb, dtype=np.int64)
+                for i in range(rb):
+                    left = cur[i - bpp] if i >= bpp else 0
                     up = prior[i]
-                    ul = prior[i - 1] if i else 0
+                    ul = prior[i - bpp] if i >= bpp else 0
                     if ft == 3:
                         pred = (left + up) // 2
                     else:  # Paeth
@@ -399,11 +446,143 @@ def _png_codec():
                             if pa <= pb and pa <= pc
                             else (up if pb <= pc else ul)
                         )
-                    left = (filt[i] + pred) % 256
-                    cur[i] = left
+                    cur[i] = (filt[i] + pred) % 256
             out[r] = cur
             prior = cur
-        return h, w, out.astype(np.uint8)
+        return out
+
+    def encode(pixels, palette=None, interlace: int = 0) -> bytes:
+        px = np.asarray(pixels)
+        plte = None
+        if palette is not None:
+            plte = np.asarray(palette)
+            if (
+                plte.dtype != np.uint8
+                or plte.ndim != 2
+                or plte.shape[1] != 3
+                or not 1 <= plte.shape[0] <= 256
+            ):
+                raise ValueError("palette must be (n<=256, 3) uint8")
+            if px.dtype != np.uint8 or px.ndim != 2:
+                raise ValueError("palette pixels must be (h, w) uint8 indices")
+            if px.size and int(px.max()) >= plte.shape[0]:
+                raise ValueError("palette index out of range")
+            depth, color, ch = 8, 3, 1
+        elif px.dtype == np.uint8:
+            depth = 8
+        elif px.dtype == np.uint16:
+            depth = 16
+        else:
+            raise ValueError("pixels must be uint8 (depth 8) or uint16 (16)")
+        if plte is None:
+            if px.ndim == 2:
+                color, ch = 0, 1
+            elif px.ndim == 3 and px.shape[2] == 3:
+                color, ch = 2, 3
+            else:
+                raise ValueError("shape must be (h, w) gray or (h, w, 3) RGB")
+        if interlace not in (0, 1):
+            raise ValueError("interlace must be 0 (none) or 1 (Adam7)")
+        h, w = px.shape[0], px.shape[1]
+        bpp = ch * depth // 8
+        raw = bytearray()
+        if interlace == 0:
+            raw = _filter_block(_row_bytes(px, depth), bpp)
+        else:
+            for x0, y0, dx, dy in ADAM7:
+                sub = px[y0::dy, x0::dx]
+                if sub.shape[0] == 0 or sub.shape[1] == 0:
+                    continue  # empty pass emits nothing (§8.5)
+                raw.extend(_filter_block(_row_bytes(sub, depth), bpp))
+        ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
+        out = SIG + chunk(b"IHDR", ihdr)
+        if plte is not None:
+            out += chunk(b"PLTE", plte.tobytes())
+        return out + chunk(b"IDAT", _z.compress(bytes(raw))) + chunk(b"IEND", b"")
+
+    def decode(data: bytes):
+        if data[:8] != SIG:
+            raise ValueError("not a PNG: bad signature")
+        pos, w = 8, None
+        idat, plte = bytearray(), None
+        while pos < len(data):
+            if pos + 8 > len(data):
+                raise ValueError("truncated chunk header")
+            (ln,) = struct.unpack(">I", data[pos : pos + 4])
+            tag = data[pos + 4 : pos + 8]
+            if pos + 12 + ln > len(data):
+                raise ValueError(f"truncated {tag!r} chunk")
+            payload = data[pos + 8 : pos + 8 + ln]
+            (crc,) = struct.unpack(">I", data[pos + 8 + ln : pos + 12 + ln])
+            if _z.crc32(tag + payload) & 0xFFFFFFFF != crc:
+                raise ValueError(f"bad CRC in {tag!r} chunk")
+            if tag == b"IHDR":
+                w, h, depth, color, comp, filt, ilace = struct.unpack(
+                    ">IIBBBBB", payload
+                )
+                if comp or filt:
+                    raise ValueError("bad compression/filter method")
+                if ilace not in (0, 1):
+                    raise ValueError("interlace must be 0 or Adam7")
+                if color == 3:
+                    if depth != 8:
+                        raise ValueError("palette PNG supported at depth 8 only")
+                elif depth not in (8, 16) or color not in (0, 2):
+                    raise ValueError(
+                        "only gray/RGB at depth 8/16 or palette-8 (got "
+                        f"depth={depth}, color={color})"
+                    )
+            elif tag == b"PLTE":
+                if ln % 3 or ln == 0 or ln > 768:
+                    raise ValueError("bad PLTE length")
+                plte = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
+            elif tag == b"IDAT":
+                idat.extend(payload)
+            elif tag == b"IEND":
+                break
+            pos += 12 + ln
+        if w is None:
+            raise ValueError("missing IHDR")
+        if not idat:
+            raise ValueError("missing IDAT")
+        ch = 1 if color in (0, 3) else 3
+        bpp = ch * depth // 8
+        raw = np.frombuffer(_z.decompress(bytes(idat)), dtype=np.uint8)
+        if ilace == 0:
+            rb = w * bpp
+            if len(raw) != h * (rb + 1):
+                raise ValueError("scanline payload length mismatch")
+            samples = _unfilter_block(raw.reshape(h, rb + 1), bpp)
+        else:
+            full = np.zeros((h, w, bpp), dtype=np.int64)
+            at = 0
+            for x0, y0, dx, dy in ADAM7:
+                pw = (w - x0 + dx - 1) // dx
+                ph = (h - y0 + dy - 1) // dy
+                if pw <= 0 or ph <= 0:
+                    continue
+                prb = pw * bpp
+                block = raw[at : at + ph * (prb + 1)]
+                if block.size != ph * (prb + 1):
+                    raise ValueError("truncated Adam7 pass")
+                at += ph * (prb + 1)
+                rec = _unfilter_block(block.reshape(ph, prb + 1), bpp)
+                full[y0::dy, x0::dx] = rec.reshape(ph, pw, bpp)
+            if at != len(raw):
+                raise ValueError("scanline payload length mismatch")
+            samples = full.reshape(h, w * bpp)
+        if depth == 8:
+            px = samples.astype(np.uint8)
+        else:
+            px = (samples[:, 0::2] * 256 + samples[:, 1::2]).astype(np.uint16)
+        px = px.reshape((h, w) if ch == 1 else (h, w, ch))
+        if color == 3:
+            if plte is None:
+                raise ValueError("palette image missing PLTE")
+            if px.size and int(px.max()) >= plte.shape[0]:
+                raise ValueError("palette index out of range")
+            px, ch = plte[px], 3
+        return h, w, ch, depth, px
 
     return encode, decode
 
@@ -1455,28 +1634,11 @@ def png_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     become the pixel raster of a ((L%64)+1)-wide grayscale image (last
     row padded with spaces), encoded through :func:`png_encode` in an
     Arrow-batched kernel — the fixture for the real-decode operator."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    enc, pad = png_encode, _PNG_PAD  # closure-captured, pickled by value
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            pngs, lens = [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                w = (L % 64) + 1
-                h = max(1, -(-L // w))
-                px = np.full(h * w, pad, dtype=np.uint8)
-                px[:L] = buf
-                pngs.append(enc(px.reshape(h, w)))
-                lens.append(L)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "n_bytes": lens, "png": pngs}
-            )
-
-    return docs.mapInPandas(batches, schema=PNG_MEDIA_SCHEMA)
+    fixture = _png_fixture  # closure-captured, pickled by value
+    return _per_doc(
+        spark, sf_dir, PNG_MEDIA_SCHEMA,
+        lambda doc_id, buf: [(doc_id, len(buf), fixture(buf))],
+    )
 
 
 def decode_png_features(media: DataFrame) -> DataFrame:
@@ -1488,12 +1650,10 @@ def decode_png_features(media: DataFrame) -> DataFrame:
     dec = png_decode  # closure-captured, pickled by value
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         for pdf in it:
             ws, hs, ns, sums, md5s = [], [], [], [], []
             for payload in pdf["png"]:
-                h, w, px = dec(bytes(payload))
+                h, w, _, _, px = dec(bytes(payload))
                 ws.append(w)
                 hs.append(h)
                 ns.append(h * w)
@@ -1599,37 +1759,14 @@ def media_decode_wav(
     ``kernel``: optional replacement decoder with the wav_decode
     contract ``bytes -> (rate, int16 ndarray)`` (e.g. a soundfile/
     libsndfile wrapper); plan shape unchanged."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # closure-captured, by value
     enc, dec = wav_encode, (kernel or wav_decode)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows(doc_id, buf):
+        rate, pcm = dec(enc(buf.astype(np.int16)))
+        return [(doc_id, int(pcm.size), rate) + _sum_and_csv_md5(pcm)]
 
-        import numpy as np
-
-        for pdf in it:
-            ns, rates, sums, md5s = [], [], [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                wav = enc(buf.astype(np.int16))
-                rate, pcm = dec(wav)
-                ns.append(int(pcm.size))
-                rates.append(rate)
-                sums.append(int(pcm.sum(dtype="int64")))
-                csv = ",".join(str(int(v)) for v in pcm)
-                md5s.append(hashlib.md5(csv.encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_samples": ns,
-                    "sample_rate": rates,
-                    "sample_sum": sums,
-                    "samples_md5": md5s,
-                }
-            )
-
-    return docs.mapInPandas(batches, schema=WAV_FEATURES_SCHEMA)
+    return _per_doc(spark, sf_dir, WAV_FEATURES_SCHEMA, rows)
 
 
 JPEG_FEATURES_SCHEMA = (
@@ -1668,57 +1805,36 @@ def media_decode_jpeg(
     mapInPandas over the scan, map-only) is untouched.  The
     from-scratch decoder stays the test oracle for any injected
     kernel (tests/test_media_kernels.py)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # closure-captured, by value
     jenc, jdec = jpeg_encode, (kernel or jpeg_decode)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        for pdf in it:
-            ws, hs, nb, sums, md5s = [], [], [], [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                bw = (L % 12) + 1
-                bh = max(1, (L + bw - 1) // bw)
-                codes = np.full(bw * bh, 32, dtype=np.int64)
-                codes[:L] = buf
-                img = np.kron(
-                    codes.reshape(bh, bw), np.ones((8, 8), dtype=np.int64)
-                ).astype(np.uint8)
-                h, w, ch, px = jdec(jenc(img))
-                if (h, w, ch) != (8 * bh, 8 * bw, 1):
-                    raise AssertionError(
-                        f"JPEG geometry drifted: {(h, w, ch)} for {(bh, bw)}"
-                    )
-                grid = px.reshape(bh, 8, bw, 8)
-                if (grid.min(axis=(1, 3)) != grid.max(axis=(1, 3))).any():
-                    raise AssertionError(
-                        "unit-quant JPEG decoded a constant block as "
-                        "non-constant — codec regression"
-                    )
-                dec_vals = grid[:, 0, :, 0].reshape(-1)
-                ws.append(w)
-                hs.append(h)
-                nb.append(bw * bh)
-                sums.append(int(px.sum(dtype=np.int64)))
-                csv = ",".join(str(int(v)) for v in dec_vals)
-                md5s.append(hashlib.md5(csv.encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "n_blocks": nb,
-                    "pixel_sum": sums,
-                    "blocks_md5": md5s,
-                }
+    def rows(doc_id, buf):
+        L = len(buf)
+        bw = (L % 12) + 1
+        bh = max(1, (L + bw - 1) // bw)
+        codes = np.full(bw * bh, 32, dtype=np.int64)
+        codes[:L] = buf
+        img = np.kron(
+            codes.reshape(bh, bw), np.ones((8, 8), dtype=np.int64)
+        ).astype(np.uint8)
+        h, w, ch, px = jdec(jenc(img))
+        if (h, w, ch) != (8 * bh, 8 * bw, 1):
+            raise AssertionError(
+                f"JPEG geometry drifted: {(h, w, ch)} for {(bh, bw)}"
             )
+        grid = px.reshape(bh, 8, bw, 8)
+        if (grid.min(axis=(1, 3)) != grid.max(axis=(1, 3))).any():
+            raise AssertionError(
+                "unit-quant JPEG decoded a constant block as "
+                "non-constant — codec regression"
+            )
+        csv = ",".join(str(int(v)) for v in grid[:, 0, :, 0].reshape(-1))
+        return [(
+            doc_id, w, h, bw * bh, int(px.sum(dtype=np.int64)),
+            hashlib.md5(csv.encode()).hexdigest(),
+        )]
 
-    return docs.mapInPandas(batches, schema=JPEG_FEATURES_SCHEMA)
+    return _per_doc(spark, sf_dir, JPEG_FEATURES_SCHEMA, rows)
 
 
 RESIZED_SCHEMA = "doc_id long, src_w int, src_h int, resized binary"
@@ -1786,267 +1902,6 @@ def media_resize(
     )
 
 
-def _png_codec_ex():
-    """General (encode, decode) for PNG covering color type 0
-    (grayscale) and 2 (RGB truecolor) at bit depths 8 and 16, color
-    type 3 (palette, depth 8) with a PLTE chunk, and BOTH interlace
-    methods (0 = sequential, 1 = Adam7) — byte-level filters with a
-    bpp-stride 'left' per RFC 2083 §6, seven independently-filtered
-    reduced images per §8.5.  Nested for by-value pickling like every
-    codec here.
-
-    encode(pixels, palette=None, interlace=0): (h, w) → gray, (h, w,
-    3) → RGB; uint8 → depth 8, uint16 → depth 16 (big-endian samples
-    per the spec).  With ``palette`` (an (n≤256, 3) uint8 array),
-    ``pixels`` is an (h, w) uint8 INDEX raster → color type 3.
-    decode(data) → (height, width, channels, depth, ndarray); palette
-    images come back EXPANDED to an (h, w, 3) uint8 raster (channels
-    3) — the form every downstream feature/phash/resize kernel wants.
-    """
-    import struct
-    import zlib as _z
-
-    import numpy as np
-
-    SIG = b"\x89PNG\r\n\x1a\n"
-    # Adam7 pass grid: (x0, y0, dx, dy) per RFC 2083 §8.5
-    ADAM7 = (
-        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-    )
-
-    def chunk(tag: bytes, payload: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(payload))
-            + tag
-            + payload
-            + struct.pack(">I", _z.crc32(tag + payload) & 0xFFFFFFFF)
-        )
-
-    def _row_bytes(px, depth):
-        # (h, rb) int64 byte matrix, big-endian sample order
-        h = px.shape[0]
-        if depth == 8:
-            return px.reshape(h, -1).astype(np.int64)
-        hi = (px.reshape(h, -1) >> 8) & 0xFF
-        lo = px.reshape(h, -1) & 0xFF
-        out = np.empty((h, hi.shape[1] * 2), dtype=np.int64)
-        out[:, 0::2] = hi
-        out[:, 1::2] = lo
-        return out
-
-    def _shift(row, bpp):
-        return np.concatenate((np.zeros(bpp, dtype=np.int64), row[:-bpp]))
-
-    def _filter_block(rows, bpp):
-        # One independently-filtered scanline block (the whole image,
-        # or one Adam7 pass): prior starts at zero, filter type cycles
-        # r % 5 to exercise all five.
-        raw = bytearray()
-        prior = np.zeros(rows.shape[1], dtype=np.int64)
-        for r in range(rows.shape[0]):
-            cur = rows[r]
-            ft = r % 5
-            left = _shift(cur, bpp)
-            if ft == 0:
-                filt = cur
-            elif ft == 1:  # Sub
-                filt = (cur - left) % 256
-            elif ft == 2:  # Up
-                filt = (cur - prior) % 256
-            elif ft == 3:  # Average
-                filt = (cur - (left + prior) // 2) % 256
-            else:  # Paeth
-                ul = _shift(prior, bpp)
-                p = left + prior - ul
-                pa, pb, pc = np.abs(p - left), np.abs(p - prior), np.abs(p - ul)
-                pred = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prior, ul)
-                )
-                filt = (cur - pred) % 256
-            raw.append(ft)
-            raw.extend(filt.astype(np.uint8).tobytes())
-            prior = cur
-        return raw
-
-    def _unfilter_block(rows, bpp):
-        # Inverse of _filter_block: (n, rb+1) uint8 → (n, rb) int64.
-        n, rbp = rows.shape
-        rb = rbp - 1
-        out = np.zeros((n, rb), dtype=np.int64)
-        prior = np.zeros(rb, dtype=np.int64)
-        for r in range(n):
-            ft, filt = int(rows[r, 0]), rows[r, 1:].astype(np.int64)
-            if ft == 0:
-                cur = filt
-            elif ft == 2:
-                cur = (filt + prior) % 256
-            elif ft == 1:
-                # recon[i] = filt[i] + recon[i-bpp]: independent
-                # cumsum chains per byte offset mod bpp
-                cur = np.empty(rb, dtype=np.int64)
-                for o in range(bpp):
-                    cur[o::bpp] = np.cumsum(filt[o::bpp]) % 256
-            else:
-                cur = np.zeros(rb, dtype=np.int64)
-                for i in range(rb):
-                    left = cur[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    ul = prior[i - bpp] if i >= bpp else 0
-                    if ft == 3:
-                        pred = (left + up) // 2
-                    else:  # Paeth
-                        p = left + up - ul
-                        pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                        pred = (
-                            left
-                            if pa <= pb and pa <= pc
-                            else (up if pb <= pc else ul)
-                        )
-                    cur[i] = (filt[i] + pred) % 256
-            out[r] = cur
-            prior = cur
-        return out
-
-    def encode(pixels, palette=None, interlace: int = 0) -> bytes:
-        px = np.asarray(pixels)
-        plte = None
-        if palette is not None:
-            plte = np.asarray(palette)
-            if (
-                plte.dtype != np.uint8
-                or plte.ndim != 2
-                or plte.shape[1] != 3
-                or not 1 <= plte.shape[0] <= 256
-            ):
-                raise ValueError("palette must be (n<=256, 3) uint8")
-            if px.dtype != np.uint8 or px.ndim != 2:
-                raise ValueError("palette pixels must be (h, w) uint8 indices")
-            if px.size and int(px.max()) >= plte.shape[0]:
-                raise ValueError("palette index out of range")
-            depth, color, ch = 8, 3, 1
-        elif px.dtype == np.uint8:
-            depth = 8
-        elif px.dtype == np.uint16:
-            depth = 16
-        else:
-            raise ValueError("pixels must be uint8 (depth 8) or uint16 (16)")
-        if plte is None:
-            if px.ndim == 2:
-                color, ch = 0, 1
-            elif px.ndim == 3 and px.shape[2] == 3:
-                color, ch = 2, 3
-            else:
-                raise ValueError("shape must be (h, w) gray or (h, w, 3) RGB")
-        if interlace not in (0, 1):
-            raise ValueError("interlace must be 0 (none) or 1 (Adam7)")
-        h, w = px.shape[0], px.shape[1]
-        bpp = ch * depth // 8
-        raw = bytearray()
-        if interlace == 0:
-            raw = _filter_block(_row_bytes(px, depth), bpp)
-        else:
-            for x0, y0, dx, dy in ADAM7:
-                sub = px[y0::dy, x0::dx]
-                if sub.shape[0] == 0 or sub.shape[1] == 0:
-                    continue  # empty pass emits nothing (§8.5)
-                raw.extend(_filter_block(_row_bytes(sub, depth), bpp))
-        ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
-        out = SIG + chunk(b"IHDR", ihdr)
-        if plte is not None:
-            out += chunk(b"PLTE", plte.tobytes())
-        return out + chunk(b"IDAT", _z.compress(bytes(raw))) + chunk(b"IEND", b"")
-
-    def decode(data: bytes):
-        if data[:8] != SIG:
-            raise ValueError("not a PNG: bad signature")
-        pos, w = 8, None
-        idat, plte = bytearray(), None
-        while pos < len(data):
-            if pos + 8 > len(data):
-                raise ValueError("truncated chunk header")
-            (ln,) = struct.unpack(">I", data[pos : pos + 4])
-            tag = data[pos + 4 : pos + 8]
-            if pos + 12 + ln > len(data):
-                raise ValueError(f"truncated {tag!r} chunk")
-            payload = data[pos + 8 : pos + 8 + ln]
-            (crc,) = struct.unpack(">I", data[pos + 8 + ln : pos + 12 + ln])
-            if _z.crc32(tag + payload) & 0xFFFFFFFF != crc:
-                raise ValueError(f"bad CRC in {tag!r} chunk")
-            if tag == b"IHDR":
-                w, h, depth, color, comp, filt, ilace = struct.unpack(
-                    ">IIBBBBB", payload
-                )
-                if comp or filt:
-                    raise ValueError("bad compression/filter method")
-                if ilace not in (0, 1):
-                    raise ValueError("interlace must be 0 or Adam7")
-                if color == 3:
-                    if depth != 8:
-                        raise ValueError("palette PNG supported at depth 8 only")
-                elif depth not in (8, 16) or color not in (0, 2):
-                    raise ValueError(
-                        "only gray/RGB at depth 8/16 or palette-8 (got "
-                        f"depth={depth}, color={color})"
-                    )
-            elif tag == b"PLTE":
-                if ln % 3 or ln == 0 or ln > 768:
-                    raise ValueError("bad PLTE length")
-                plte = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
-            elif tag == b"IDAT":
-                idat.extend(payload)
-            elif tag == b"IEND":
-                break
-            pos += 12 + ln
-        if w is None:
-            raise ValueError("missing IHDR")
-        if not idat:
-            raise ValueError("missing IDAT")
-        ch = 1 if color in (0, 3) else 3
-        bpp = ch * depth // 8
-        raw = np.frombuffer(_z.decompress(bytes(idat)), dtype=np.uint8)
-        if ilace == 0:
-            rb = w * bpp
-            if len(raw) != h * (rb + 1):
-                raise ValueError("scanline payload length mismatch")
-            samples = _unfilter_block(raw.reshape(h, rb + 1), bpp)
-        else:
-            full = np.zeros((h, w, bpp), dtype=np.int64)
-            at = 0
-            for x0, y0, dx, dy in ADAM7:
-                pw = (w - x0 + dx - 1) // dx
-                ph = (h - y0 + dy - 1) // dy
-                if pw <= 0 or ph <= 0:
-                    continue
-                prb = pw * bpp
-                block = raw[at : at + ph * (prb + 1)]
-                if block.size != ph * (prb + 1):
-                    raise ValueError("truncated Adam7 pass")
-                at += ph * (prb + 1)
-                rec = _unfilter_block(block.reshape(ph, prb + 1), bpp)
-                full[y0::dy, x0::dx] = rec.reshape(ph, pw, bpp)
-            if at != len(raw):
-                raise ValueError("scanline payload length mismatch")
-            samples = full.reshape(h, w * bpp)
-        if depth == 8:
-            px = samples.astype(np.uint8)
-        else:
-            px = (samples[:, 0::2] * 256 + samples[:, 1::2]).astype(np.uint16)
-        px = px.reshape((h, w) if ch == 1 else (h, w, ch))
-        if color == 3:
-            if plte is None:
-                raise ValueError("palette image missing PLTE")
-            if px.size and int(px.max()) >= plte.shape[0]:
-                raise ValueError("palette index out of range")
-            px, ch = plte[px], 3
-        return h, w, ch, depth, px
-
-    return encode, decode
-
-
-png_encode_ex, png_decode_ex = _png_codec_ex()
-
-
 RGB_FEATURES_SCHEMA = (
     "doc_id long, width int, height int, channels int, depth int, "
     "pixel_sum bigint, pixel_md5 string"
@@ -2054,10 +1909,10 @@ RGB_FEATURES_SCHEMA = (
 
 
 def media_decode_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUECOLOR decode round trip through the generalized codec: each
+    """TRUECOLOR decode round trip through the PNG codec: each
     document's utf-8 bytes become the row-major (r, g, b) raster of an
     RGB image ((L%32)+1 pixels wide, space-padded), encoded and decoded
-    through :func:`png_encode_ex` / :func:`png_decode_ex` in one
+    through :func:`png_encode` / :func:`png_decode` in one
     Arrow-batched kernel.  The md5 is over the decoded pixel buffer in
     row-major channel order — exactly the padded byte string — so the
     DuckDB oracle certifies every decoded CHANNEL value without ever
@@ -2066,45 +1921,22 @@ def media_decode_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture assumption (as in media_resize/media_decode): ASCII text,
     so oracle codepoint indexing equals this side's byte view; the
     codec itself is byte-based and holds for any payload."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    enc, dec = png_encode_ex, png_decode_ex  # closures, pickled by value
+    enc, dec = png_encode, png_decode  # closures, pickled by value
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows(doc_id, buf):
+        L = len(buf)
+        w = (L % 32) + 1
+        rb = 3 * w
+        h = max(1, -(-L // rb))
+        px = np.full(h * rb, 0x20, dtype=np.uint8)
+        px[:L] = buf
+        hh, ww, ch, depth, out = dec(enc(px.reshape(h, w, 3)))
+        return [(
+            doc_id, ww, hh, ch, depth, int(out.sum(dtype="int64")),
+            hashlib.md5(out.tobytes()).hexdigest(),
+        )]
 
-        import numpy as np
-
-        for pdf in it:
-            ws, hs, chs, ds, sums, md5s = [], [], [], [], [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                w = (L % 32) + 1
-                rb = 3 * w
-                h = max(1, -(-L // rb))
-                px = np.full(h * rb, 0x20, dtype=np.uint8)
-                px[:L] = buf
-                px = px.reshape(h, w, 3)
-                hh, ww, ch, depth, out = dec(enc(px))
-                ws.append(ww)
-                hs.append(hh)
-                chs.append(ch)
-                ds.append(depth)
-                sums.append(int(out.sum(dtype="int64")))
-                md5s.append(hashlib.md5(out.tobytes()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "channels": chs,
-                    "depth": ds,
-                    "pixel_sum": sums,
-                    "pixel_md5": md5s,
-                }
-            )
-
-    return docs.mapInPandas(batches, schema=RGB_FEATURES_SCHEMA)
+    return _per_doc(spark, sf_dir, RGB_FEATURES_SCHEMA, rows)
 
 
 GIF_ANIM_SCHEMA = (
@@ -2135,63 +1967,29 @@ def media_decode_gif(
     ``kernel``: optional replacement decoder with the gif_decode
     contract ``bytes -> (h, w, [RGB frame ndarrays], [delays_cs])``
     (e.g. a PIL wrapper); plan shape unchanged."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # closures, pickled by value
     genc, gdec = gif_encode, (kernel or gif_decode)
+    pal = _analytic_palette(4, 7, 13)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        i64 = np.arange(64, dtype=np.int64)
-        pal = np.stack(
-            [(i64 * 4) % 256, (i64 * 7) % 256, (i64 * 13) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in it:
-            ids, fis, dls, ws, hs, sums, md5s = [], [], [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                buf = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                w = (L % 20) + 1
-                h = max(1, -(-L // w))
-                idx = np.zeros(h * w, dtype=np.int64)
-                idx[:L] = buf % 64
-                f0 = idx.reshape(h, w).astype(np.uint8)
-                f1 = ((idx + 7) % 64).reshape(h, w).astype(np.uint8)
-                hh, ww, frames, delays = gdec(
-                    genc([f0, f1], pal, delays=[3, 7])
-                )
-                if (hh, ww, len(frames), delays) != (h, w, 2, [3, 7]):
-                    raise AssertionError(
-                        f"GIF geometry drifted: {(hh, ww, len(frames), delays)}"
-                    )
-                for fi, fr in enumerate(frames):
-                    vals = fr.reshape(-1)
-                    ids.append(doc_id)
-                    fis.append(fi)
-                    dls.append(delays[fi])
-                    ws.append(ww)
-                    hs.append(hh)
-                    sums.append(int(vals.sum(dtype="int64")))
-                    md5s.append(
-                        hashlib.md5(
-                            ",".join(map(str, vals.tolist())).encode()
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": fis,
-                    "delay": dls,
-                    "width": ws,
-                    "height": hs,
-                    "pixel_sum": sums,
-                    "pixel_md5": md5s,
-                }
+    def rows(doc_id, buf):
+        L = len(buf)
+        w = (L % 20) + 1
+        h = max(1, -(-L // w))
+        idx = np.zeros(h * w, dtype=np.int64)
+        idx[:L] = buf % 64
+        f0 = idx.reshape(h, w).astype(np.uint8)
+        f1 = ((idx + 7) % 64).reshape(h, w).astype(np.uint8)
+        hh, ww, frames, delays = gdec(genc([f0, f1], pal, delays=[3, 7]))
+        if (hh, ww, len(frames), delays) != (h, w, 2, [3, 7]):
+            raise AssertionError(
+                f"GIF geometry drifted: {(hh, ww, len(frames), delays)}"
             )
+        return [
+            (doc_id, fi, delays[fi], ww, hh) + _sum_and_csv_md5(fr)
+            for fi, fr in enumerate(frames)
+        ]
 
-    return docs.mapInPandas(batches, schema=GIF_ANIM_SCHEMA)
+    return _per_doc(spark, sf_dir, GIF_ANIM_SCHEMA, rows)
 
 
 BMP_SCHEMA = (
@@ -2219,78 +2017,36 @@ def media_decode_bmp(
     ``kernel``: optional replacement decoder with the bmp_decode
     contract ``bytes -> (h, w, channels, flat uint8 ndarray)``; plan
     shape unchanged."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # closures, pickled by value
     benc, bdec = bmp_encode, (kernel or bmp_decode)
+    pal = _analytic_palette(6, 10, 14)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows(doc_id, buf):
+        L = len(buf)
+        # rgb24 arm
+        w = (L % 16) + 1
+        h = max(1, -(-L // (3 * w)))
+        raster = np.full(3 * w * h, 32, dtype=np.uint8)
+        raster[:L] = buf
+        hh, ww, ch, rgb = bdec(benc(raster.reshape(h, w, 3)))
+        if (hh, ww, ch) != (h, w, 3):
+            raise AssertionError(f"BMP rgb24 geometry: {(hh, ww, ch)}")
+        out = [(doc_id, "rgb24", ww, hh) + _sum_and_csv_md5(rgb)]
+        # pal8 arm
+        wp = (L % 20) + 1
+        hp = max(1, -(-L // wp))
+        idx = np.zeros(hp * wp, dtype=np.uint8)
+        idx[:L] = buf % 64
+        hh, ww, ch, px = bdec(benc(idx.reshape(hp, wp), palette=pal))
+        if (hh, ww, ch) != (hp, wp, 3):
+            raise AssertionError(f"BMP pal8 geometry: {(hh, ww, ch)}")
+        return out + [(doc_id, "pal8", ww, hh) + _sum_and_csv_md5(px)]
 
-        import numpy as np
-
-        i64 = np.arange(64, dtype=np.int64)
-        pal = np.stack(
-            [(i64 * 6) % 256, (i64 * 10) % 256, (i64 * 14) % 256], axis=1
-        ).astype(np.uint8)
-
-        def emit(out, vals):
-            vals = np.asarray(vals).reshape(-1)
-            out.append(
-                (
-                    int(vals.sum(dtype="int64")),
-                    hashlib.md5(
-                        ",".join(map(str, vals.tolist())).encode()
-                    ).hexdigest(),
-                )
-            )
-
-        for pdf in it:
-            ids, kinds, ws, hs, stats = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                buf = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                # rgb24 arm
-                w = (L % 16) + 1
-                h = max(1, -(-L // (3 * w)))
-                raster = np.full(3 * w * h, 32, dtype=np.uint8)
-                raster[:L] = buf
-                hh, ww, ch, px = bdec(benc(raster.reshape(h, w, 3)))
-                if (hh, ww, ch) != (h, w, 3):
-                    raise AssertionError(f"BMP rgb24 geometry: {(hh, ww, ch)}")
-                ids.append(doc_id)
-                kinds.append("rgb24")
-                ws.append(ww)
-                hs.append(hh)
-                emit(stats, px)
-                # pal8 arm
-                wp = (L % 20) + 1
-                hp = max(1, -(-L // wp))
-                idx = np.zeros(hp * wp, dtype=np.uint8)
-                idx[:L] = buf % 64
-                hh, ww, ch, px = bdec(benc(idx.reshape(hp, wp), palette=pal))
-                if (hh, ww, ch) != (hp, wp, 3):
-                    raise AssertionError(f"BMP pal8 geometry: {(hh, ww, ch)}")
-                ids.append(doc_id)
-                kinds.append("pal8")
-                ws.append(ww)
-                hs.append(hh)
-                emit(stats, px)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "kind": kinds,
-                    "width": ws,
-                    "height": hs,
-                    "pixel_sum": [s0 for s0, _ in stats],
-                    "pixel_md5": [m for _, m in stats],
-                }
-            )
-
-    return docs.mapInPandas(batches, schema=BMP_SCHEMA)
+    return _per_doc(spark, sf_dir, BMP_SCHEMA, rows)
 
 
 def media_decode_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PALETTE + ADAM7 decode round trip through the generalized
+    """PALETTE + ADAM7 decode round trip through the PNG
     codec: each document's utf-8 bytes (mod 64) become the index
     raster of a palette image ((L%24)+1 pixels wide, zero-padded) over
     a fixed analytic 64-entry palette (i → (5i, 11i, 17i) mod 256),
@@ -2305,53 +2061,21 @@ def media_decode_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture assumption (as in media_decode/media_decode_rgb): ASCII
     text, so oracle codepoint indexing equals this side's byte view;
     the codec itself is byte-based and holds for any payload."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    enc, dec = png_encode_ex, png_decode_ex  # closures, pickled by value
+    enc, dec = png_encode, png_decode  # closures, pickled by value
+    plte = _analytic_palette(5, 11, 17)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def rows(doc_id, buf):
+        L = len(buf)
+        w = (L % 24) + 1
+        h = max(1, -(-L // w))
+        idx = np.zeros(h * w, dtype=np.uint8)
+        idx[:L] = buf % 64
+        hh, ww, ch, depth, out = dec(
+            enc(idx.reshape(h, w), palette=plte, interlace=1)
+        )
+        return [(doc_id, ww, hh, ch, depth) + _sum_and_csv_md5(out)]
 
-        import numpy as np
-
-        i64 = np.arange(64, dtype=np.int64)
-        plte = np.stack(
-            [(i64 * 5) % 256, (i64 * 11) % 256, (i64 * 17) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in it:
-            ws, hs, chs, ds, sums, md5s = [], [], [], [], [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer((text or "").encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                w = (L % 24) + 1
-                h = max(1, -(-L // w))
-                idx = np.zeros(h * w, dtype=np.uint8)
-                idx[:L] = buf % 64
-                hh, ww, ch, depth, out = dec(
-                    enc(idx.reshape(h, w), palette=plte, interlace=1)
-                )
-                ws.append(ww)
-                hs.append(hh)
-                chs.append(ch)
-                ds.append(depth)
-                sums.append(int(out.sum(dtype="int64")))
-                md5s.append(
-                    hashlib.md5(
-                        ",".join(map(str, out.reshape(-1).tolist())).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": ws,
-                    "height": hs,
-                    "channels": chs,
-                    "depth": ds,
-                    "pixel_sum": sums,
-                    "pixel_md5": md5s,
-                }
-            )
-
-    return docs.mapInPandas(batches, schema=RGB_FEATURES_SCHEMA)
+    return _per_doc(spark, sf_dir, RGB_FEATURES_SCHEMA, rows)
 
 
 PHASH_SCHEMA = "doc_id long, width int, height int, phash string, n_set int"
@@ -2384,12 +2108,10 @@ def media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = png_decode  # closure-captured, pickled by value
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in it:
             ids, ws, hs, hashes, nset = [], [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["png"]):
-                h, w, px = dec(bytes(payload))
+                h, w, _, _, px = dec(bytes(payload))
                 if h < 8 or w < 8:
                     continue
                 px = np.asarray(px, dtype=np.int64).reshape(h, w)
@@ -2679,6 +2401,42 @@ def _avi_codec(jenc, jdec):
 avi_encode, avi_decode, avi_frame_blobs = _avi_codec(jpeg_encode, jpeg_decode)
 
 
+def _fixture_encoders(penc, aenc, pad):
+    """(png_fixture, avi_fixture): document bytes → the encoded PNG /
+    AVI fixture blob, a pure function of the bytes and their length.
+    The one builder of each raster, shared by :func:`png_media_table`,
+    :func:`avi_media_table` and :func:`write_media_dir`; takes the
+    encoders as arguments so the closures capture them by value."""
+
+    def png_fixture(buf):
+        # ((L%64)+1)-wide gray raster, last row padded with ``pad``
+        L = len(buf)
+        w = (L % 64) + 1
+        h = max(1, -(-L // w))
+        px = np.full(h * w, pad, dtype=np.uint8)
+        px[:L] = buf
+        return penc(px.reshape(h, w))
+
+    def avi_fixture(buf):
+        # ((L%5)+2) gray 8 x ((L%24)+8) frames cycling through the bytes
+        L = len(buf)
+        w = (L % 24) + 8
+        nf = (L % 5) + 2
+        if L:
+            px = np.resize(buf, nf * 8 * w)
+        else:
+            px = np.full(nf * 8 * w, pad, dtype=np.uint8)
+        frames = [
+            px[f * 8 * w : (f + 1) * 8 * w].reshape(8, w) for f in range(nf)
+        ]
+        return aenc(frames, fps=10)
+
+    return png_fixture, avi_fixture
+
+
+_png_fixture, _avi_fixture = _fixture_encoders(png_encode, avi_encode, _PNG_PAD)
+
+
 AVI_MEDIA_SCHEMA = "doc_id long, n_bytes int, avi binary"
 VIDEO_FRAME_SCHEMA = (
     "doc_id long, frame_idx int, width int, height int, n_frames int"
@@ -2693,34 +2451,11 @@ def avi_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the video frame-sampling operator.  The frame geometry is a pure
     function of the byte length, so the structural fields are
     SQL-derivable for the oracle while the pixel path stays real."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    enc, pad = avi_encode, _PNG_PAD  # closure-captured, pickled by value
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            avis, lens = [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                w = (L % 24) + 8
-                nf = (L % 5) + 2
-                if L:
-                    px = np.resize(buf, nf * 8 * w)
-                else:
-                    px = np.full(nf * 8 * w, pad, dtype=np.uint8)
-                frames = [
-                    px[f * 8 * w : (f + 1) * 8 * w].reshape(8, w)
-                    for f in range(nf)
-                ]
-                avis.append(enc(frames, fps=10))
-                lens.append(L)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "n_bytes": lens, "avi": avis}
-            )
-
-    return docs.mapInPandas(batches, schema=AVI_MEDIA_SCHEMA)
+    fixture = _avi_fixture  # closure-captured, pickled by value
+    return _per_doc(
+        spark, sf_dir, AVI_MEDIA_SCHEMA,
+        lambda doc_id, buf: [(doc_id, len(buf), fixture(buf))],
+    )
 
 
 def video_frame_sample(
@@ -2784,78 +2519,43 @@ def write_media_dir(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
     media already sits on shared storage — the operator that matters
     at 100 TB is :func:`media_ingest_dir`'s scan side.
     """
-    import os as _os
+    import os
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    penc, wenc, aenc, genc, benc, pad = (
-        png_encode, wav_encode, avi_encode, gif_encode, bmp_encode, _PNG_PAD,
+    pngf, wenc, avif, genc, benc, pad = (
+        _png_fixture, wav_encode, _avi_fixture, gif_encode, bmp_encode,
+        _PNG_PAD,
     )
-    _os.makedirs(out_dir, exist_ok=True)
+    gif_pal = _analytic_palette(4, 7, 13)
+    os.makedirs(out_dir, exist_ok=True)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
+    def rows(doc_id, buf):
+        L = len(buf)
+        m = doc_id % 5
+        if m == 0:
+            blob, ext = pngf(buf), "png"
+        elif m == 1:
+            blob, ext = wenc(buf.astype(np.int16)), "wav"
+        elif m == 2:
+            blob, ext = avif(buf), "avi"
+        elif m == 3:
+            w = (L % 16) + 4
+            nf = (L % 3) + 2  # >= 2 frames: always an animation
+            src = buf % 64 if L else np.full(1, pad % 64, np.uint8)
+            px = np.resize(src, nf * 4 * w)
+            frames = [
+                px[f * 4 * w : (f + 1) * 4 * w].reshape(4, w) for f in range(nf)
+            ]
+            blob, ext = genc(frames, gif_pal, delays=[5] * nf), "gif"
+        else:
+            w = (L % 10) + 2
+            src = buf if L else np.full(1, pad, np.uint8)
+            blob, ext = benc(np.resize(src, 3 * w * 3).reshape(3, w, 3)), "bmp"
+        with open(os.path.join(out_dir, f"{doc_id}.{ext}"), "wb") as fh:
+            fh.write(blob)
+        return [(1,)]
 
-        import numpy as np
-
-        gif_pal = np.stack(
-            [
-                (np.arange(64) * 4) % 256,
-                (np.arange(64) * 7) % 256,
-                (np.arange(64) * 13) % 256,
-            ],
-            axis=1,
-        ).astype(np.uint8)
-        for pdf in it:
-            n = 0
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                L = len(buf)
-                m = int(doc_id) % 5
-                if m == 0:
-                    w = (L % 64) + 1
-                    h = max(1, -(-L // w))
-                    px = np.full(h * w, pad, dtype=np.uint8)
-                    px[:L] = buf
-                    blob, ext = penc(px.reshape(h, w)), "png"
-                elif m == 1:
-                    blob, ext = wenc(buf.astype(np.int16)), "wav"
-                elif m == 2:
-                    w = (L % 24) + 8
-                    nf = (L % 5) + 2
-                    if L:
-                        px = np.resize(buf, nf * 8 * w)
-                    else:
-                        px = np.full(nf * 8 * w, pad, dtype=np.uint8)
-                    frames = [
-                        px[f * 8 * w : (f + 1) * 8 * w].reshape(8, w)
-                        for f in range(nf)
-                    ]
-                    blob, ext = aenc(frames, fps=10), "avi"
-                elif m == 3:
-                    w = (L % 16) + 4
-                    nf = (L % 3) + 2  # >= 2 frames: always an animation
-                    src = buf % 64 if L else np.full(1, pad % 64, np.uint8)
-                    px = np.resize(src, nf * 4 * w)
-                    frames = [
-                        px[f * 4 * w : (f + 1) * 4 * w].reshape(4, w)
-                        for f in range(nf)
-                    ]
-                    blob, ext = genc(frames, gif_pal, delays=[5] * nf), "gif"
-                else:
-                    w = (L % 10) + 2
-                    src = buf if L else np.full(1, pad, np.uint8)
-                    px = np.resize(src, 3 * w * 3).reshape(3, w, 3)
-                    blob, ext = benc(px), "bmp"
-                with open(
-                    os.path.join(out_dir, f"{int(doc_id)}.{ext}"), "wb"
-                ) as fh:
-                    fh.write(blob)
-                n += 1
-            yield pd.DataFrame({"n": [n]})
-
-    return int(
-        docs.mapInPandas(batches, schema="n long").agg(F.sum("n")).collect()[0][0]
-    )
+    written = _per_doc(spark, sf_dir, "n long", rows)
+    return int(written.agg(F.sum("n")).collect()[0][0])
 
 
 def media_ingest_dir(spark: SparkSession, media_dir: str) -> DataFrame:
@@ -2864,7 +2564,10 @@ def media_ingest_dir(spark: SparkSession, media_dir: str) -> DataFrame:
     (file-granular partitions — the scan parallelizes across
     executors and prunes nothing it shouldn't), then an Arrow-batched
     kernel content-sniffs each payload through :func:`decode_real`
-    (PNG/JPEG/WAV/AVI native codecs) and emits typed metadata.
+    (PNG/JPEG/WAV/AVI/GIF/BMP native codecs) and emits typed metadata.
+    Each file name must end in ``<doc_id>.<ext>``; a file without a
+    numeric stem (``cat.png``) fails the task with a ValueError that
+    names the path.
 
     At 100 TB this is the shape you want: the scan is the built-in
     file source (split planning, locality, no driver listing loop
@@ -2889,7 +2592,13 @@ def media_ingest_dir(spark: SparkSession, media_dir: str) -> DataFrame:
                 )
             }
             for path, content in zip(pdf["path"], pdf["content"]):
-                doc_id = int(re.search(r"(\d+)\.\w+$", path).group(1))
+                m = re.search(r"(\d+)\.\w+$", path)
+                if m is None:
+                    raise ValueError(
+                        f"media file {path!r} has no numeric doc_id stem "
+                        "(expected <doc_id>.<ext>)"
+                    )
+                doc_id = int(m.group(1))
                 info = dreal(bytes(content))
                 kind = info["kind"]
                 out["doc_id"].append(doc_id)
@@ -3387,7 +3096,7 @@ bmp_encode, bmp_decode = _bmp_codec()
 gif_encode, gif_decode = _gif_codec()
 
 decode_real = _decode_real_factory(
-    png_decode_ex, jpeg_decode, wav_decode, avi_frame_blobs, gif_decode,
+    png_decode, jpeg_decode, wav_decode, avi_frame_blobs, gif_decode,
     bmp_decode,
 )
 
@@ -3481,43 +3190,22 @@ def media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: binaryFile-style map-only Arrow kernel — feature
     extraction fuses with the decode; nothing shuffles."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     enc, dec = wav_encode, wav_decode  # closure-captured, by value
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def rows(doc_id, buf):
+        _, pcm = dec(enc(buf.astype(np.int16)))
+        s = pcm.astype(np.int64)
+        n = int(s.size)
+        mu = int(s.sum()) // n
+        d = s - mu
+        energy = int((d * d).sum())
+        # rms floor-quantized to 1e-6: floor is tie-free, so the value
+        # is identical under python round-half-even vs SQL
+        # round-half-away semantics
+        return [(
+            doc_id, n, mu, energy, int(np.abs(d).max()),
+            int(((d[:-1] * d[1:]) < 0).sum()),
+            math.floor(math.sqrt(energy / n) * 1e6) / 1e6,
+        )]
 
-        import numpy as np
-
-        for pdf in it:
-            ns, mus, ens, peaks, zcrs, rmss = [], [], [], [], [], []
-            for text in pdf["text"]:
-                buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                _, pcm = dec(enc(buf.astype(np.int16)))
-                s = pcm.astype(np.int64)
-                n = int(s.size)
-                mu = int(s.sum()) // n
-                d = s - mu
-                energy = int((d * d).sum())
-                ns.append(n)
-                mus.append(mu)
-                ens.append(energy)
-                peaks.append(int(np.abs(d).max()))
-                zcrs.append(int(((d[:-1] * d[1:]) < 0).sum()))
-                # floor-quantized to 1e-6: floor is tie-free, so the
-                # value is identical under python round-half-even vs
-                # SQL round-half-away semantics
-                rmss.append(math.floor(math.sqrt(energy / n) * 1e6) / 1e6)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_samples": ns,
-                    "mean_sample": mus,
-                    "energy": ens,
-                    "peak_dev": peaks,
-                    "zcr": zcrs,
-                    "rms": rmss,
-                }
-            )
-
-    return docs.mapInPandas(batches, schema=AUDIO_FEATURES_SCHEMA)
+    return _per_doc(spark, sf_dir, AUDIO_FEATURES_SCHEMA, rows)

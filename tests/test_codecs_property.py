@@ -24,7 +24,7 @@ from heatmap_spark.operators.multimodal import (
 def test_png_roundtrip_is_identity(h, w, seed):
     rng = np.random.default_rng(seed)
     px = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    hh, ww, out = png_decode(png_encode(px))
+    hh, ww, _, _, out = png_decode(png_encode(px))
     assert (hh, ww) == (h, w)
     assert np.array_equal(out, px)
 
@@ -61,7 +61,7 @@ def test_png_corruption_is_detected(h, w, seed, flip):
     pos = flip % len(data)
     data[pos] ^= 0xFF
     try:
-        hh, ww, out = png_decode(bytes(data))
+        hh, ww, _, _, out = png_decode(bytes(data))
     except Exception:
         return  # detected — the desired outcome (no silent corruption)
     assert (hh, ww) == (h, w) and np.array_equal(out, px)
@@ -76,53 +76,58 @@ def test_png_corruption_is_detected(h, w, seed, flip):
     deep=st.booleans(),
 )
 def test_png_ex_roundtrip_all_modes(h, w, seed, rgb, deep):
-    """The generalized codec round-trips gray/RGB at depth 8/16 — all
+    """The PNG codec round-trips gray/RGB at depth 8/16 — all
     five byte-level filters with the bpp-stride 'left' exercised by
     the row cycle."""
-    from heatmap_spark.operators.multimodal import png_decode_ex, png_encode_ex
-
     rng = np.random.default_rng(seed)
     shape = (h, w, 3) if rgb else (h, w)
     if deep:
         px = rng.integers(0, 65536, size=shape, dtype=np.int64).astype(np.uint16)
     else:
         px = rng.integers(0, 256, size=shape, dtype=np.int64).astype(np.uint8)
-    hh, ww, ch, depth, out = png_decode_ex(png_encode_ex(px))
+    hh, ww, ch, depth, out = png_decode(png_encode(px))
     assert (hh, ww, ch, depth) == (h, w, 3 if rgb else 1, 16 if deep else 8)
     assert out.dtype == px.dtype
     assert np.array_equal(out, px)
 
 
-@settings(max_examples=30, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=8),
-    w=st.integers(min_value=1, max_value=40),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_png_ex_gray8_bitstream_equals_legacy_codec(h, w, seed):
-    """On gray-8 input the generalized encoder must produce the SAME
-    bitstream as the round-4 codec (bpp=1 reduces every stride to the
-    special case) — so the oracle-gated q_media_decode path and the
-    general path can never diverge."""
-    from heatmap_spark.operators.multimodal import png_encode, png_encode_ex
+# SHA-256 of png_encode's output for seeded gray-8 rasters, computed by
+# the gray-8-only encoder this codec replaced (it emitted the same
+# bytes): ((h, w), seed, digest).  h >= 5 runs all five row filters.
+# The digests assume CPython's zlib at its default compression level.
+_GRAY8_PNG_SHA256 = [
+    ((1, 1), 1000, "03160cdad741c6d454f051c1c3cab39c8889371fdf997fdac1a2c87d2deac476"),
+    ((5, 1), 1001, "8209347519189d8ee24be074173218bc1cfa424a264dc52f1200b857eacc4e96"),
+    ((5, 7), 1002, "5b9b7698c541c165b7fbc74a5033312461035fa698c5abcbed1f6cb47597a06f"),
+    ((6, 13), 1003, "323f2a3ba85b8da16fbd7a0668f69a962bddf28888d6d3ff57fc0cee1000d0b3"),
+    ((9, 64), 1004, "da9ca5761111c0096e47fc71f3ee6b2e9e3e5f757d5968dab49836a701e48700"),
+    ((12, 3), 1005, "7db9463750d53381f535908d0dab745e2a5a501b54ff95424dde00f1c2116567"),
+    ((17, 31), 1006, "36a2a5164ed29ee43148af8759f233de7abd53e78ff311d8212f1806fce00dc1"),
+    ((40, 40), 1007, "5dd159852115e36439ef3d1bcdcae6b92a54d3615e7b366e079f826d12f1f544"),
+]
 
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    assert png_encode_ex(px) == png_encode(px)
+
+def test_png_gray8_bitstream_is_pinned():
+    """The gray-8 bitstream that q_media_decode and q_media_phash
+    decode stays byte-for-byte what it was: a change to the filter
+    cycle, IHDR fields or chunk framing breaks a digest."""
+    import hashlib
+
+    for (h, w), seed, want in _GRAY8_PNG_SHA256:
+        px = np.random.default_rng(seed).integers(0, 256, size=(h, w), dtype=np.uint8)
+        assert hashlib.sha256(png_encode(px)).hexdigest() == want, (h, w)
 
 
 def test_png_ex_rejects_corruption_and_unsupported():
     import pytest
 
-    from heatmap_spark.operators.multimodal import png_decode_ex, png_encode_ex
-
     px = np.arange(48, dtype=np.uint8).reshape(4, 4, 3)
-    blob = bytearray(png_encode_ex(px))
+    blob = bytearray(png_encode(px))
     blob[40] ^= 0xFF  # flip a byte inside a chunk
     with pytest.raises(ValueError):
-        png_decode_ex(bytes(blob))
+        png_decode(bytes(blob))
     with pytest.raises(ValueError):
-        png_decode_ex(b"\x89PNG\r\n\x1a\njunk")
+        png_decode(b"\x89PNG\r\n\x1a\njunk")
     # sub-byte palette depths are declared unsupported, not mis-decoded
     import struct
     import zlib
@@ -138,11 +143,11 @@ def test_png_ex_rejects_corruption_and_unsupported():
     sig = b"\x89PNG\r\n\x1a\n"
     ihdr4 = struct.pack(">IIBBBBB", 2, 2, 4, 3, 0, 0, 0)
     with pytest.raises(ValueError, match="depth 8"):
-        png_decode_ex(sig + chunk(b"IHDR", ihdr4) + chunk(b"IEND", b""))
+        png_decode(sig + chunk(b"IHDR", ihdr4) + chunk(b"IEND", b""))
     # a palette image without its PLTE chunk must refuse cleanly
     idx = np.zeros((2, 2), dtype=np.uint8)
     plte = np.array([[1, 2, 3]], dtype=np.uint8)
-    blob = png_encode_ex(idx, palette=plte)
+    blob = png_encode(idx, palette=plte)
     stripped = bytearray()
     pos = 8
     stripped += blob[:8]
@@ -152,14 +157,14 @@ def test_png_ex_rejects_corruption_and_unsupported():
             stripped += blob[pos : pos + 12 + ln]
         pos += 12 + ln
     with pytest.raises(ValueError, match="missing PLTE"):
-        png_decode_ex(bytes(stripped))
+        png_decode(bytes(stripped))
 
 
 def test_decode_real_reports_channels_and_depth():
-    from heatmap_spark.operators.multimodal import decode_real, png_encode_ex
+    from heatmap_spark.operators.multimodal import decode_real
 
     px = (np.arange(24, dtype=np.int64) * 999 % 65536).astype(np.uint16).reshape(2, 4, 3)
-    img = decode_real(png_encode_ex(px))
+    img = decode_real(png_encode(px))
     assert (img["channels"], img["depth"]) == (3, 16)
     assert np.array_equal(img["pixels"], px)
 
@@ -175,8 +180,6 @@ def test_png_ex_adam7_roundtrip_all_modes(h, w, seed, mode):
     """Adam7 round trip across every supported mode, including image
     sizes where late passes are empty (w or h < pass origin) — and the
     interlaced decode equals the sequential decode of the same raster."""
-    from heatmap_spark.operators.multimodal import png_decode_ex, png_encode_ex
-
     rng = np.random.default_rng(seed)
     plte = None
     if mode == "pal":
@@ -189,8 +192,8 @@ def test_png_ex_adam7_roundtrip_all_modes(h, w, seed, mode):
         dt = np.uint16 if mode.endswith("16") else np.uint8
         px = rng.integers(0, hi, size=shape, dtype=np.int64).astype(dt)
         expect = px
-    il = png_decode_ex(png_encode_ex(px, palette=plte, interlace=1))
-    sq = png_decode_ex(png_encode_ex(px, palette=plte, interlace=0))
+    il = png_decode(png_encode(px, palette=plte, interlace=1))
+    sq = png_decode(png_encode(px, palette=plte, interlace=0))
     assert np.array_equal(il[4], expect)
     assert il[:4] == sq[:4]
     assert np.array_equal(il[4], sq[4])
@@ -205,8 +208,6 @@ def test_png_adam7_layout_matches_spec_hand_assembly():
     codec must decode it to exactly the intended raster."""
     import struct
     import zlib
-
-    from heatmap_spark.operators.multimodal import png_decode_ex
 
     rng = np.random.default_rng(42)
     h, w = 11, 13  # odd sizes: every pass non-trivial, some ragged
@@ -239,7 +240,7 @@ def test_png_adam7_layout_matches_spec_hand_assembly():
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
     )
-    hh, ww, ch, depth, out = png_decode_ex(blob)
+    hh, ww, ch, depth, out = png_decode(blob)
     assert (hh, ww, ch, depth) == (h, w, 1, 8)
     assert np.array_equal(out, px)
 

@@ -102,7 +102,7 @@ def test_png_codec_roundtrip_all_filters():
     from heatmap_spark.operators.multimodal import png_decode, png_encode
 
     cases = [
-        (np.arange(7 * 11, dtype=np.uint8).reshape(7, 11) * 3) % 256,
+        ((np.arange(7 * 11).reshape(7, 11) * 3) % 256).astype(np.uint8),
         np.zeros((1, 1), dtype=np.uint8),
         np.full((6, 2), 255, dtype=np.uint8),
         ((np.arange(10)[:, None] * 31 + np.arange(64)[None, :] * 7) % 256).astype(
@@ -112,7 +112,7 @@ def test_png_codec_roundtrip_all_filters():
     for px in cases:
         data = png_encode(px)
         assert data[:8] == b"\x89PNG\r\n\x1a\n"
-        h, w, out = png_decode(data)
+        h, w, _, _, out = png_decode(data)
         assert (h, w) == px.shape
         assert np.array_equal(out, px)
 
@@ -208,7 +208,7 @@ def test_media_phash_robust_to_noise_and_discriminative(spark, sf_smoke):
     h1, h2 = ahash(base), ahash(noisy)
     assert (h1 != h2).sum() <= 3
     # decode round-trip feeds the same raster the hash saw
-    hh, ww, px = png_decode(png_encode(base))
+    hh, ww, _, _, px = png_decode(png_encode(base))
     assert (np.asarray(px).reshape(hh, ww) == base).all()
 
 
@@ -383,7 +383,7 @@ def test_media_ingest_dir_end_to_end(spark, sf_smoke, tmp_path):
 
     from heatmap_spark.operators.multimodal import (
         media_ingest_dir,
-        png_decode_ex,
+        png_decode,
         write_media_dir,
     )
     from heatmap_spark.sources.tables import load_table
@@ -426,9 +426,21 @@ def test_media_ingest_dir_end_to_end(spark, sf_smoke, tmp_path):
     # pixel spot check: one PNG file carries the document bytes verbatim
     some = next(k for k in docs if k % 5 == 0 and len(docs[k]) > 0)
     blob = open(f"{d}/{some}.png", "rb").read()
-    _, _, _, _, px = png_decode_ex(blob)
+    _, _, _, _, px = png_decode(blob)
     buf = np.frombuffer(docs[some].encode("utf-8"), dtype=np.uint8)
     assert np.array_equal(px.reshape(-1)[: len(buf)], buf)
+
+
+def test_media_ingest_dir_names_an_unnumbered_file(spark, tmp_path):
+    """A crawl file without a numeric ``<doc_id>.<ext>`` stem fails the
+    ingest with a ValueError naming that file, not an AttributeError."""
+    import numpy as np
+
+    from heatmap_spark.operators.multimodal import media_ingest_dir, png_encode
+
+    (tmp_path / "cat.png").write_bytes(png_encode(np.zeros((2, 2), np.uint8)))
+    with pytest.raises(Exception, match=r"ValueError[\s\S]*cat\.png"):
+        media_ingest_dir(spark, str(tmp_path)).collect()
 
 
 def test_audio_features_match_python_signal_math(spark, sf_smoke):
