@@ -219,7 +219,7 @@ def z_value(row: Column | str, col: Column | str, bits: int = DETAIL_MAX_ZOOM) -
     a point-lookup KV store, heatmap.py:137) but a parquet/object-store
     deployment does: writing tile data ordered by z_value clusters each
     bbox into few row groups, so min/max footer stats prune the rest of
-    a 100 TB scan (demonstrated in tests/test_layout.py).
+    a 100 TB scan (key correctness pinned in tests/test_layout.py).
 
     Pure integer Column math (shift/and/add), identical in DuckDB via
     :func:`z_value_sql` — oracle-checkable.  bits ≤ 31 → key < 2^62.

@@ -478,8 +478,8 @@ def haversine_nearest(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame
     remaining ties break deterministically on (user_id, lat, lon).
 
     At 100 TB you'd pre-filter candidates to the probe's surrounding
-    tiles (tile_id range predicate pushed into the scan — see
-    operators/layout Z-order clustering) before the exact distance;
+    tiles (tile range predicates pushed into the scan — see the tile
+    store's bucket-pruned reads) before the exact distance;
     the brute-force form here is the correctness baseline.
 
     Reference: tile.py:45-52 exposes tile bounds/centers for exactly

@@ -563,7 +563,8 @@ def q_heatmap_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the additive-algebra path an incremental store uses for deletes /
     GDPR erasure (no rebuild: the delta is slice-sized, and at 100 TB
     the re-aggregate touches only the slice's tiles when composed with
-    merge_delta_into_store).  Tiles whose count reaches zero drop out.
+    merge_delta_into_partitioned_store).  Tiles whose count reaches
+    zero drop out.
     The oracle builds the pyramid of the REMAINING slice directly, so
     the hash proves retraction ≡ rebuild-without-slice (weights are
     unit counts — integer sums in double, cancellation exact)."""
@@ -770,45 +771,18 @@ def q_tile_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_tile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the locations stream through the versioned tile store
-    (foreachBatch delta-pyramid merge, zooms 8-12, 3 micro-batches) and
-    return the final store contents — which must equal the batch
-    pyramid over the same rows (the oracle).  Uses the production
-    default layout (auto → bucket-partitioned, since min_zoom=8 >=
-    BUCKET_ZOOM): per-batch merge cost tracks batch locality, not
-    store size."""
-    from heatmap_spark.streaming.tile_store import (
-        read_tile_store,
-        stream_pyramid_to_store,
-    )
-
-    loc = load_locations(spark, sf_dir)
-    d = _scratch_dir("tile_store_q_")
-    src, store, ckpt = f"{d}/in", f"{d}/store", f"{d}/ckpt"
-    loc.repartition(3).write.parquet(src)
-    stream = (
-        spark.readStream.schema(loc.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_pyramid_to_store(stream, store, ckpt, min_zoom=8, max_zoom=12)
-    q.awaitTermination(timeout=600)
-    return read_tile_store(spark, store)
-
-
-def q_streaming_tile_store_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partitioned-store twin of q_streaming_tile_store: the same
-    3-micro-batch drain through the bucket-partitioned store (per-
-    spatial-cell versions — localized batches rewrite only touched
-    cells).  The final store must equal the batch pyramid, so the
-    SAME oracle gates both layouts."""
+    """Drain the locations stream through the bucket-partitioned tile
+    store (foreachBatch delta-pyramid merge, zooms 8-12, 3
+    micro-batches) and return the final store contents — which must
+    equal the batch pyramid over the same rows (the oracle).  Per-batch
+    merge cost tracks batch locality, not store size."""
     from heatmap_spark.streaming.tile_store import (
         read_partitioned_store,
         stream_pyramid_to_partitioned_store,
     )
 
     loc = load_locations(spark, sf_dir)
-    d = _scratch_dir("tile_store_part_q_")
+    d = _scratch_dir("tile_store_q_")
     src, store, ckpt = f"{d}/in", f"{d}/store", f"{d}/ckpt"
     loc.repartition(3).write.parquet(src)
     stream = (
@@ -1854,9 +1828,8 @@ def q_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton keys for the distinct zoom-12 tile set — the layout key
-    operators/layout.cluster_by_zorder writes by (pure integer
-    interleave, bit-identical in DuckDB)."""
+    """Morton keys for the distinct zoom-12 tile set — the Z-order
+    layout key (pure integer interleave, bit-identical in DuckDB)."""
     loc = load_locations(spark, sf_dir)
     t12 = (
         loc.where(F.col("source") != "background")
@@ -4052,11 +4025,6 @@ WHERE c.event_type = 'click' AND v.event_type = 'view'""",
     ),
     "q_streaming_tile_store": QuerySpec(
         q_streaming_tile_store,
-        f"""WITH {_LOC_CTE},\n{_PTS_CTE},\n{_EXPANDED_CTE}\n"""
-        + _LEVELED_AGG.replace("generate_series(6, 21)", "generate_series(8, 12)"),
-    ),
-    "q_streaming_tile_store_partitioned": QuerySpec(
-        q_streaming_tile_store_partitioned,
         f"""WITH {_LOC_CTE},\n{_PTS_CTE},\n{_EXPANDED_CTE}\n"""
         + _LEVELED_AGG.replace("generate_series(6, 21)", "generate_series(8, 12)"),
     ),

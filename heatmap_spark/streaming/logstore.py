@@ -33,7 +33,9 @@ grain — plus the store-specific ingest and serve code around it.
 :func:`foreach_batch` drives any store's ingest from a stream.
 
 The tile store (tile_store.py) keeps its own bucket-versioned layout
-and shares only :class:`_Fs` and :func:`_join` from here.
+— one version dir and marker per spatial bucket, not a partial log —
+and shares :class:`_Fs`, :func:`_join`, the ``"<ver>:<batch>"`` marker
+parser :func:`_parse_base_marker` and :func:`foreach_batch` from here.
 """
 
 from __future__ import annotations

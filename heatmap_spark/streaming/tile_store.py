@@ -4,22 +4,17 @@ The missing production write path: the reference recomputes the whole
 pyramid per run and upserts rows into Cassandra (reference
 heatmap.py:128-137,156-157).  Here the same outcome is incremental —
 each micro-batch of locations becomes a DELTA pyramid, merged into the
-stored base with :func:`heatmap_spark.operators.pyramid.pyramid_merge`
-(sum is reassociative, so merge = union + re-aggregate), and the new
-base is written Z-ordered so bbox reads over the store prune row
-groups (operators/layout.py).
+stored rows (sum is reassociative, so merge = union + re-aggregate).
 
-Two layouts share one commit protocol (versioned directories + a
-``_LATEST`` marker, swapped only after the new version's write
-succeeds — readers never observe a partial version):
-
-* **partitioned** (production default): per-spatial-bucket versions, a
-  micro-batch rewrites only the coarse cells it touches — per-batch
-  cost tracks batch locality, not store size.
-* **flat**: one version dir for the whole store — simplest possible
-  layout, kept for sub-``BUCKET_ZOOM`` pyramids and as the minimal
-  reference implementation of the protocol.  Its merge is O(store)
-  per batch, so it is NOT the path for a large store.
+Layout: one directory per spatial bucket — the zoom-``BUCKET_ZOOM``
+ancestor cell of a row, 256 of them — holding versioned dirs
+``bucket=<k>/v=<n>`` and a ``bucket=<k>/_LATEST`` marker
+``"<n>:<last merged batch id>"``, swapped only after the new version's
+directory is in place (readers never observe a partial version).  A
+micro-batch rewrites only the buckets it touches, so per-batch cost
+tracks batch locality, not store size.  Each version's files are
+sorted by (zoom, row, col), so bbox reads inside a bucket prune row
+groups by their footer min/max stats.
 
 All marker/staging metadata I/O goes through the Hadoop FileSystem
 API via the JVM gateway (:class:`_Fs`), so the store works on any
@@ -32,151 +27,59 @@ On a real deployment this versioning is what an ACID table format
 (Delta/Iceberg/Hudi) provides; the merge/layout logic here is
 format-agnostic and would move over unchanged.
 
-Exactly-once: the marker records (version, last merged batch_id).  A
-micro-batch replayed after a crash (checkpoint not yet committed but
-marker already swapped) is detected by ``batch_id <= last`` and
-skipped, so a delta is never merged twice; a crash BEFORE the swap
-leaves an orphan version dir the next write simply overwrites.
+Exactly-once: each bucket's marker records (version, last merged
+batch_id).  A micro-batch replayed after a crash (checkpoint not yet
+committed but some markers already swapped) skips the buckets whose
+marker records it, so a delta is never merged twice into a bucket; a
+crash BEFORE a bucket's swap leaves an orphan version dir the replay
+simply overwrites.
 
 Scale shape per batch: the delta shuffles only the micro-batch's
-aggregates, the merge shuffles (base ∪ delta) AGGREGATE rows — never
-raw event history — and the base row count is bounded by the live tile
-set, so steady-state cost is O(batch + live tiles of touched buckets),
-independent of total history (the property that matters at 100 TB/day).
+aggregates, the merge shuffles (touched buckets ∪ delta) AGGREGATE
+rows — never raw event history — and the stored row count is bounded
+by the live tile set, so steady-state cost is O(batch + live tiles of
+touched buckets), independent of total history.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from heatmap_spark.operators.layout import cluster_by_zorder
-from heatmap_spark.operators.pyramid import build_pyramid, pyramid_merge
-from heatmap_spark.streaming.logstore import _Fs, _join
+from heatmap_spark.operators.pyramid import build_pyramid
+from heatmap_spark.streaming.logstore import (
+    _Fs,
+    _join,
+    _parse_base_marker,
+    foreach_batch,
+)
 
 _LATEST = "_LATEST"
-
-
-def _read_marker(store_path: str) -> tuple[int, int]:
-    """(version, last_batch_id), (-1, -1) if nothing committed."""
-    fs = _Fs()
-    marker = _join(store_path, _LATEST)
-    if not fs.exists(marker):
-        return -1, -1
-    version, batch = fs.read_text(marker).strip().split(":")
-    return int(version), int(batch)
-
-
-def read_tile_store(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """Current pyramid in the store, or None if no version committed.
-
-    Layout-dispatching: a flat ``_LATEST`` marker wins; otherwise any
-    live ``bucket=`` dirs are read through the partitioned path — so
-    readers need not know which layout the writer used."""
-    version, _ = _read_marker(store_path)
-    if version >= 0:
-        return spark.read.parquet(_join(store_path, f"v={version}"))
-    return read_partitioned_store(spark, store_path)
-
-
-def merge_delta_into_store(
-    spark: SparkSession, delta: DataFrame, store_path: str, batch_id: int = 0
-) -> bool:
-    """Flat-layout merge: write a new whole-store Z-ordered version
-    dir, then atomically swap the marker.  Returns False (no-op) if
-    ``batch_id`` was already merged — the replay guard.
-
-    O(store) per batch — use :func:`merge_delta_into_partitioned_store`
-    (the production default) unless the pyramid has zoom levels below
-    ``BUCKET_ZOOM``."""
-    version, last_batch = _read_marker(store_path)
-    if batch_id <= last_batch:
-        return False
-    base = read_tile_store(spark, store_path)
-    merged = delta if base is None else pyramid_merge(base, delta)
-    nxt = version + 1
-    out = cluster_by_zorder(
-        merged, num_partitions=max(2, spark.sparkContext.defaultParallelism // 4)
-    )
-    out.write.mode("overwrite").parquet(_join(store_path, f"v={nxt}"))
-    _Fs(spark).write_text_atomic(_join(store_path, _LATEST), f"{nxt}:{batch_id}")
-    return True
-
-
-def stream_pyramid_to_store(
-    locations: DataFrame,
-    store_path: str,
-    checkpoint_path: str,
-    min_zoom: int = 6,
-    max_zoom: int = 21,
-    layout: str = "auto",
-):
-    """Maintain the tile store from a locations stream via foreachBatch.
-
-    Returns the started StreamingQuery (availableNow trigger drains all
-    pending input then stops — call ``.awaitTermination()``).  Each
-    micro-batch runs the BATCH pyramid build on the batch DataFrame and
-    merges under the replay guard.
-
-    ``layout``: ``"auto"`` (default) uses the bucket-PARTITIONED store
-    whenever ``min_zoom >= BUCKET_ZOOM`` — the production path whose
-    per-batch cost tracks batch locality instead of store size — and
-    falls back to the flat store only for coarser pyramids;
-    ``"partitioned"`` / ``"flat"`` force a layout.
-    :func:`read_tile_store` reads either layout transparently.
-    """
-    if layout not in ("auto", "partitioned", "flat"):
-        raise ValueError(f"unknown layout {layout!r}")
-    if layout == "partitioned" or (layout == "auto" and min_zoom >= BUCKET_ZOOM):
-        return stream_pyramid_to_partitioned_store(
-            locations, store_path, checkpoint_path, min_zoom, max_zoom
-        )
-    spark = locations.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = build_pyramid(batch_df, mode="explode", min_zoom=min_zoom, max_zoom=max_zoom)
-        merge_delta_into_store(spark, delta, store_path, batch_id)
-
-    return (
-        locations.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Partition-pruned store: per-spatial-bucket versions, so a localized
-# micro-batch rewrites only the buckets it touches.
-# ---------------------------------------------------------------------------
-
 BUCKET_ZOOM = 4  # 2^4 × 2^4 = 256 coarse cells
 
 
-def spatial_bucket(bucket_zoom: int = BUCKET_ZOOM):
-    """Coarse-cell id of a pyramid row: its zoom-``bucket_zoom``
+def spatial_bucket():
+    """Coarse-cell id of a pyramid row: its zoom-``BUCKET_ZOOM``
     ancestor tile, flattened to row*2^B + col.  Pure integer shifts of
     the grouping keys — requires every stored row to have
-    zoom >= bucket_zoom (asserted by callers via min_zoom)."""
+    zoom >= BUCKET_ZOOM (asserted by callers via min_zoom)."""
     from pyspark.sql import functions as F
 
-    b = 1 << bucket_zoom
+    b = 1 << BUCKET_ZOOM
     # SQL shiftright accepts a column shift amount (the Python helper
-    # F.shiftright is literal-only).  A zoom below bucket_zoom would be
+    # F.shiftright is literal-only).  A zoom below BUCKET_ZOOM would be
     # Java-masked (shiftright(row, -2) == shiftright(row, 30)) and
     # silently collapse rows into bucket 0 — raise per-row instead.
     expr = F.expr(
-        f"CAST(shiftright(row, CAST(zoom - {bucket_zoom} AS INT)) * {b}"
-        f" + shiftright(col, CAST(zoom - {bucket_zoom} AS INT)) AS INT)"
+        f"CAST(shiftright(row, CAST(zoom - {BUCKET_ZOOM} AS INT)) * {b}"
+        f" + shiftright(col, CAST(zoom - {BUCKET_ZOOM} AS INT)) AS INT)"
     )
     return F.when(
-        F.col("zoom") < bucket_zoom,
+        F.col("zoom") < BUCKET_ZOOM,
         F.raise_error(
             F.concat(
-                F.lit(f"spatial_bucket: zoom "),
+                F.lit("spatial_bucket: zoom "),
                 F.col("zoom").cast("string"),
-                F.lit(f" < bucket_zoom {bucket_zoom}"),
+                F.lit(f" < bucket_zoom {BUCKET_ZOOM}"),
             )
         ).cast("int"),
     ).otherwise(expr)
@@ -186,44 +89,50 @@ def _bucket_marker_path(store_path: str, bucket: int) -> str:
     return _join(store_path, f"bucket={bucket}", _LATEST)
 
 
-def _read_bucket_marker(store_path: str, bucket: int) -> tuple[int, int]:
+def _committed(
+    store_path: str, buckets: list[int] | None = None
+) -> dict[int, tuple[int, int]]:
+    """``{bucket: (committed version, last merged batch id)}`` for the
+    committed buckets among ``buckets``.  Opens one marker per
+    requested bucket; only ``buckets=None`` (a full read, or vacuum)
+    lists the store for its ``bucket=`` dirs."""
     fs = _Fs()
-    marker = _bucket_marker_path(store_path, bucket)
-    if not fs.exists(marker):
-        return -1, -1
-    version, batch = fs.read_text(marker).strip().split(":")
-    return int(version), int(batch)
+    if buckets is None:
+        buckets = [
+            int(d.split("=", 1)[1])
+            for d in fs.list_names(store_path)
+            if d.startswith("bucket=")
+        ]
+    out = {}
+    for k in sorted(set(buckets)):
+        marker = _bucket_marker_path(store_path, k)
+        if fs.exists(marker):
+            out[k] = _parse_base_marker(fs.read_text(marker))
+    return out
 
 
-def _live_buckets(store_path: str) -> list[int]:
-    fs = _Fs()
-    out = []
-    for d in fs.list_names(store_path):
-        if d.startswith("bucket="):
-            k = int(d.split("=", 1)[1])
-            if _read_bucket_marker(store_path, k)[0] >= 0:
-                out.append(k)
-    return sorted(out)
+def _read_versions(
+    spark: SparkSession, store_path: str, live: dict[int, tuple[int, int]]
+) -> DataFrame | None:
+    if not live:
+        return None
+    return spark.read.parquet(
+        *(_join(store_path, f"bucket={k}", f"v={ver}") for k, (ver, _) in live.items())
+    )
 
 
 def read_partitioned_store(
     spark: SparkSession, store_path: str, buckets: list[int] | None = None
 ) -> DataFrame | None:
-    """Current pyramid across ``buckets`` (default: all live buckets).
+    """Current pyramid across ``buckets`` (default: all committed
+    buckets), or None if none of them is committed.
 
     Passing an explicit bucket list is DIRECTORY-level partition
     pruning: a bbox serving read maps its viewport to coarse cells and
-    never opens the other buckets' files (row-group Z-order skipping
-    then applies within — operators/layout.py)."""
-    live = _live_buckets(store_path)
-    ks = live if buckets is None else [k for k in buckets if k in set(live)]
-    if not ks:
-        return None
-    paths = [
-        _join(store_path, f"bucket={k}", f"v={_read_bucket_marker(store_path, k)[0]}")
-        for k in ks
-    ]
-    return spark.read.parquet(*paths)
+    never opens the other buckets' markers or files; inside a bucket,
+    zoom/row/col predicates prune row groups (the files are sorted by
+    (zoom, row, col))."""
+    return _read_versions(spark, store_path, _committed(store_path, buckets))
 
 
 def merge_delta_into_partitioned_store(
@@ -231,21 +140,19 @@ def merge_delta_into_partitioned_store(
     delta: DataFrame,
     store_path: str,
     batch_id: int = 0,
-    bucket_zoom: int = BUCKET_ZOOM,
     drop_zeros: bool = False,
 ) -> int:
     """Merge one delta pyramid, rewriting ONLY the spatial buckets it
     touches.  Returns the number of buckets committed (0 = replay
     no-op).
 
-    This is the steady-state answer to the whole-store rewrite the
-    flat store pays per batch: per-batch cost is O(delta + live tiles
-    of TOUCHED buckets).  A localized batch (one city) touches a
-    handful of the 256 zoom-4 cells, so merge cost tracks batch
-    locality instead of store size — the property that makes
-    incremental maintenance viable at 100 TB of history.  (An ACID
-    table format with MERGE INTO + partition pruning gives the same
-    shape; this is the format-agnostic spelling.)
+    Per-batch cost is O(delta + live tiles of TOUCHED buckets).  A
+    localized batch (one city) touches a handful of the 256 zoom-4
+    cells, so merge cost tracks batch locality instead of store size —
+    the property that makes incremental maintenance viable at 100 TB
+    of history.  (An ACID table format with MERGE INTO + partition
+    pruning gives the same shape; this is the format-agnostic
+    spelling.)
 
     Exactly-once under crash-replay, per bucket: each bucket dir has
     its own (version, last_batch) marker, swapped atomically AFTER its
@@ -263,15 +170,18 @@ def merge_delta_into_partitioned_store(
     # two actions consume the delta (touched-bucket collect + staging
     # write) — cut lineage once so the micro-batch pyramid is built
     # once, not twice (same DISK_ONLY discipline as the cascade)
-    d = delta.withColumn(
-        "bucket", spatial_bucket(bucket_zoom)
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    touched = sorted(r.bucket for r in d.select("bucket").distinct().collect())
-    pending = [k for k in touched if _read_bucket_marker(store_path, k)[1] < batch_id]
+    d = delta.withColumn("bucket", spatial_bucket()).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
+    )
+    touched = [r.bucket for r in d.select("bucket").distinct().collect()]
+    live = _committed(store_path, touched)
+    pending = sorted(k for k in touched if live.get(k, (-1, -1))[1] < batch_id)
     if not pending:
         return 0
     d_pending = d.where(F.col("bucket").isin(pending))
-    base = read_partitioned_store(spark, store_path, buckets=pending)
+    base = _read_versions(
+        spark, store_path, {k: live[k] for k in pending if k in live}
+    )
     # Merge = union + re-aggregate on the pyramid key — but repartition
     # by bucket FIRST and fold bucket into the grouping key (bucket is
     # a pure function of (zoom, row, col), so groups are unchanged):
@@ -281,7 +191,7 @@ def merge_delta_into_partitioned_store(
     # shuffle instead of two (r12, guide §2.4 — same subtree-prefix
     # trick as the pyramid rollup).
     u = d_pending if base is None else base.withColumn(
-        "bucket", spatial_bucket(bucket_zoom)
+        "bucket", spatial_bucket()
     ).unionByName(d_pending)
     merged = (
         u.repartition("bucket")
@@ -312,23 +222,11 @@ def merge_delta_into_partitioned_store(
     )
     committed = 0
     for k in pending:
+        nxt = live.get(k, (-1, -1))[0] + 1
         src = _join(staging, f"bucket={k}")
-        if not fs.is_dir(src):
-            if drop_zeros:
-                # a fully-cancelled bucket: every tile retracted to
-                # zero, so the staged dir legitimately has no rows —
-                # commit an EMPTY (schema-bearing) version so readers
-                # see zero tiles for this bucket
-                ver, _ = _read_bucket_marker(store_path, k)
-                dst = _join(store_path, f"bucket={k}", f"v={ver + 1}")
-                if fs.is_dir(dst):
-                    fs.delete(dst)
-                merged.drop("bucket").limit(0).write.mode("overwrite").parquet(dst)
-                fs.write_text_atomic(
-                    _bucket_marker_path(store_path, k), f"{ver + 1}:{batch_id}"
-                )
-                committed += 1
-                continue
+        dst = _join(store_path, f"bucket={k}", f"v={nxt}")
+        staged = fs.is_dir(src)
+        if not staged and not drop_zeros:
             # Unreachable with the additive delta algebra (visits are
             # sums of positive weights, so a touched bucket's merge is
             # never empty) — if the staged dir is gone, something
@@ -336,17 +234,19 @@ def merge_delta_into_partitioned_store(
             # batch so the stream restarts and replays it; silently
             # skipping would commit the checkpoint with the delta never
             # merged.
-            raise RuntimeError(
-                f"staged bucket dir vanished before commit: {src}"
-            )
-        ver, _ = _read_bucket_marker(store_path, k)
-        dstdir = _join(store_path, f"bucket={k}")
-        fs.mkdirs(dstdir)
-        dst = _join(dstdir, f"v={ver + 1}")
+            raise RuntimeError(f"staged bucket dir vanished before commit: {src}")
         if fs.is_dir(dst):  # orphan from a crashed attempt
             fs.delete(dst)
-        fs.rename(src, dst)
-        fs.write_text_atomic(_bucket_marker_path(store_path, k), f"{ver + 1}:{batch_id}")
+        if staged:
+            fs.mkdirs(_join(store_path, f"bucket={k}"))
+            fs.rename(src, dst)
+        else:
+            # a fully-cancelled bucket: every tile retracted to zero,
+            # so the staged dir legitimately has no rows — commit an
+            # EMPTY (schema-bearing) version so readers see zero tiles
+            # for this bucket
+            merged.drop("bucket").limit(0).write.mode("overwrite").parquet(dst)
+        fs.write_text_atomic(_bucket_marker_path(store_path, k), f"{nxt}:{batch_id}")
         committed += 1
     fs.delete(staging)
     return committed
@@ -358,30 +258,23 @@ def stream_pyramid_to_partitioned_store(
     checkpoint_path: str,
     min_zoom: int = 6,
     max_zoom: int = 21,
-    bucket_zoom: int = BUCKET_ZOOM,
 ):
-    """Partitioned-store twin of :func:`stream_pyramid_to_store`."""
-    if min_zoom < bucket_zoom:
+    """Maintain the tile store from a locations stream: every non-empty
+    micro-batch runs the BATCH pyramid build and merges it under the
+    per-bucket replay guard.  Returns the started StreamingQuery
+    (availableNow trigger drains all pending input then stops — call
+    ``.awaitTermination()``)."""
+    if min_zoom < BUCKET_ZOOM:
         raise ValueError(
-            f"min_zoom {min_zoom} must be >= bucket_zoom {bucket_zoom} "
+            f"min_zoom {min_zoom} must be >= BUCKET_ZOOM {BUCKET_ZOOM} "
             "(every stored row needs a zoom-level-B ancestor)"
         )
-    spark = locations.sparkSession
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _merge(spark: SparkSession, batch_df: DataFrame, batch_id: int) -> None:
         delta = build_pyramid(batch_df, mode="explode", min_zoom=min_zoom, max_zoom=max_zoom)
-        merge_delta_into_partitioned_store(
-            spark, delta, store_path, batch_id, bucket_zoom
-        )
+        merge_delta_into_partitioned_store(spark, delta, store_path, batch_id)
 
-    return (
-        locations.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return foreach_batch(locations, checkpoint_path, _merge)
 
 
 def read_resultset(
@@ -391,22 +284,21 @@ def read_resultset(
     timespan: str,
     rs_tile_id: str,
     delta: int = 5,
-    bucket_zoom: int = BUCKET_ZOOM,
 ) -> DataFrame:
     """Point SERVING read: the single result set (user_group, timespan,
-    parent tile) a tile UI requests, from the partitioned store — the
-    production request path of the reference's heatmaps table
-    (reference heatmap.py:120-129 packages these; a UI fetches one per
-    viewport tile).
+    parent tile) a tile UI requests, from the store — the production
+    request path of the reference's heatmaps table (reference
+    heatmap.py:120-129 packages these; a UI fetches one per viewport
+    tile).
 
     Pruning story, the whole point: the parent id "z_r_c" resolves
     DRIVER-side to the coarse cell(s) its detail tiles can live in —
-    exactly ONE bucket when z >= bucket_zoom (every detail tile shares
+    exactly ONE bucket when z >= BUCKET_ZOOM (every detail tile shares
     the parent's zoom-B ancestor), 4^(B-z) cells otherwise — so the
-    scan opens ONE bucket directory of 256, and inside it the
-    zoom/row/col range predicates push to parquet row-group stats
-    (the store is written sorted by (bucket, zoom, row, col)).  Cost
-    is O(one bucket's row groups), independent of store size.
+    read opens only those buckets' markers and directories, and inside
+    them the zoom/row/col range predicates push to parquet row-group
+    stats (each version is sorted by (zoom, row, col)).  Cost is
+    O(requested buckets' row groups), independent of store size.
 
     Output: one (user_group, timespan, rs_zoom, rs_row, rs_col,
     heatmap, rs_tile_id) row (empty if the key has no visits), plus
@@ -418,12 +310,12 @@ def read_resultset(
 
     z, r, c = (int(x) for x in rs_tile_id.split("_"))
     dz = z + delta
-    if z >= bucket_zoom:
-        buckets = [(r >> (z - bucket_zoom)) * (1 << bucket_zoom) + (c >> (z - bucket_zoom))]
+    if z >= BUCKET_ZOOM:
+        buckets = [(r >> (z - BUCKET_ZOOM)) * (1 << BUCKET_ZOOM) + (c >> (z - BUCKET_ZOOM))]
     else:
-        span = 1 << (bucket_zoom - z)
+        span = 1 << (BUCKET_ZOOM - z)
         buckets = [
-            br * (1 << bucket_zoom) + bc
+            br * (1 << BUCKET_ZOOM) + bc
             for br in range(r * span, (r + 1) * span)
             for bc in range(c * span, (c + 1) * span)
         ]
@@ -482,13 +374,8 @@ def vacuum_partitioned_store(
             if now - mt >= staging_age_s:
                 fs.delete(p)
                 removed += 1
-            continue
-        if not d.startswith("bucket="):
-            continue
-        k = int(d.split("=", 1)[1])
-        latest, _ = _read_bucket_marker(store_path, k)
-        if latest < 0:
-            continue
+    for k, (latest, _) in _committed(store_path).items():
+        p = _join(store_path, f"bucket={k}")
         floor = latest - keep + 1
         for v in fs.list_names(p):
             if not v.startswith("v="):

@@ -524,16 +524,16 @@ def probe_chunk(spark, n: int) -> None:
 def probe_stream(spark, n: int) -> None:
     """End-to-end Structured Streaming throughput: n synthetic points
     land as 8 parquet files, a file stream with maxFilesPerTrigger=2
-    replays them as 4 micro-batches through stream_pyramid_to_store
-    (per-batch pyramid build + versioned store merge under the replay
-    guard).  Verifies the final store equals the one-shot batch pyramid
+    replays them as 4 micro-batches through
+    stream_pyramid_to_partitioned_store (per-batch pyramid build +
+    per-bucket store merge under the replay guard).  Verifies the final store equals the one-shot batch pyramid
     row-for-row in count and total visits."""
     import shutil
     import tempfile
 
     from heatmap_spark.streaming.tile_store import (
-        read_tile_store,
-        stream_pyramid_to_store,
+        read_partitioned_store,
+        stream_pyramid_to_partitioned_store,
     )
 
     root = tempfile.mkdtemp(prefix="stream_probe_")
@@ -547,10 +547,10 @@ def probe_stream(spark, n: int) -> None:
             .parquet(src)
         )
         t0 = time.perf_counter()
-        q = stream_pyramid_to_store(stream, store, ckpt, min_zoom=6, max_zoom=16)
+        q = stream_pyramid_to_partitioned_store(stream, store, ckpt, min_zoom=6, max_zoom=16)
         q.awaitTermination()
         dt = time.perf_counter() - t0
-        got = read_tile_store(spark, store)
+        got = read_partitioned_store(spark, store)
         n_tiles = got.count()
         batch = P.build_pyramid(
             synthetic_locations(spark, n), mode="explode", min_zoom=6, max_zoom=16
@@ -560,73 +560,6 @@ def probe_stream(spark, n: int) -> None:
             f"streaming pyramid {n:,} events in 4 micro-batches: {dt:.1f}s = "
             f"{n / dt / 1000:.0f}k events/s, store tiles {n_tiles:,} "
             f"(batch-equivalent {expect_tiles:,})"
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def probe_streampart(spark, n: int) -> None:
-    """Locality payoff of the partitioned tile store: 4 city-localized
-    micro-batches (n/4 points each, ~0.5-degree boxes) merged into the
-    flat store (whole-store rewrite per batch) vs the bucket-partitioned
-    store (touched buckets only).  Store contents must be identical."""
-    import shutil
-    import tempfile
-
-    from heatmap_spark.streaming.tile_store import (
-        merge_delta_into_partitioned_store,
-        merge_delta_into_store,
-        read_partitioned_store,
-        read_tile_store,
-    )
-
-    cities = [(40.7, -74.0), (51.5, -0.1), (35.7, 139.7), (-33.9, 151.2)]
-    per = n // 20
-
-    def city_batch(i):
-        la, lo = cities[i]
-        return spark.range(per).select(
-            (F.lit(la) + (F.col("id") % 1000).cast("double") / 2000.0).alias("latitude"),
-            (F.lit(lo) + (F.floor(F.col("id") / 1000) % 1000).cast("double") / 2000.0).alias("longitude"),
-            F.timestamp_millis(F.lit(1700000000000) + F.col("id") % 2592000000).alias("ts"),
-            F.concat(F.lit("u"), (F.col("id") % 5000).cast("string")).alias("user_id"),
-            F.lit("gps").alias("source"),
-            F.lit(1.0).alias("weight"),
-        )
-
-    base = P.build_pyramid(synthetic_locations(spark, n), mode="explode", min_zoom=6, max_zoom=16)
-    deltas = [
-        P.build_pyramid(city_batch(i), mode="explode", min_zoom=6, max_zoom=16)
-        for i in range(len(cities))
-    ]
-    for d in deltas:
-        d.count()  # warm
-
-    root = tempfile.mkdtemp(prefix="streampart_")
-    flat, part = os.path.join(root, "flat"), os.path.join(root, "part")
-    try:
-        # batch 0 = the historical base (uniform global points, ~33M
-        # tiles at n=2M) — its build cost is common to both layouts and
-        # excluded; we time the 4 localized incremental batches.
-        merge_delta_into_store(spark, base, flat, batch_id=0)
-        merge_delta_into_partitioned_store(spark, base, part, batch_id=0)
-        t0 = time.perf_counter()
-        for i, d in enumerate(deltas):
-            merge_delta_into_store(spark, d, flat, batch_id=i + 1)
-        t_flat = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        touched = [
-            merge_delta_into_partitioned_store(spark, d, part, batch_id=i + 1)
-            for i, d in enumerate(deltas)
-        ]
-        t_part = time.perf_counter() - t0
-        a, b = read_tile_store(spark, flat), read_partitioned_store(spark, part)
-        same = a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-        print(
-            f"partitioned-store locality: {n:,}-point base + 4 city batches "
-            f"({per:,} points each): flat {t_flat:.1f}s vs partitioned "
-            f"{t_part:.1f}s ({t_flat / t_part:.1f}x), buckets touched per "
-            f"batch {touched} of 256, stores identical: {same}"
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -2847,7 +2780,7 @@ def main() -> None:
                 "curation": 500_000,
                 "passages": 500_000, "semdedup": 100_000,
                 "split": 500_000, "incr": 500_000, "chunk": 2_000_000,
-                "stream": 2_000_000, "streampart": 2_000_000, "pq": 1_000_000, "opq": 1_000_000, "cc": 10_000_000, "streampass": 500_000, "bpe": 2_000_000, "ivfpq": 1_000_000, "ivfpq_opq": 1_000_000, "entity": 2_000_000, "entity_store": 1_000_000, "holt": 10_000_000, "vocab": 2_000_000, "ann_store": 1_000_000, "serve": 2_000_000, "bpe_drift": 2_000_000, "rowstore": 2_000_000, "kmeans": 500_000, "acf": 10_000_000, "cms": 2_000_000, "classifier": 2_000_000, "textindex": 2_000_000, "cusum": 10_000_000, "merge": 2_000_000, "bigram": 2_000_000, "span": 2_000_000, "textindex_inc": 2_000_000, "mixer": 20_000_000, "entropy": 1_000_000, "pmi": 2_000_000, "skipping": 2_000_000, "codec": 2_000, "graphann": 50_000, "geofence": 10_000_000, "hll": 20_000_000, "kmvstore": 20_000_000, "driftstore": 10_000_000, "kllstore": 10_000_000, "dsir": 2_000_000, "joinview": 2_000_000, "binaryann": 1_000_000, "unigram": 500_000, "drifttests": 10_000_000, "binning": 10_000_000}
+                "stream": 2_000_000, "pq": 1_000_000, "opq": 1_000_000, "cc": 10_000_000, "streampass": 500_000, "bpe": 2_000_000, "ivfpq": 1_000_000, "ivfpq_opq": 1_000_000, "entity": 2_000_000, "entity_store": 1_000_000, "holt": 10_000_000, "vocab": 2_000_000, "ann_store": 1_000_000, "serve": 2_000_000, "bpe_drift": 2_000_000, "rowstore": 2_000_000, "kmeans": 500_000, "acf": 10_000_000, "cms": 2_000_000, "classifier": 2_000_000, "textindex": 2_000_000, "cusum": 10_000_000, "merge": 2_000_000, "bigram": 2_000_000, "span": 2_000_000, "textindex_inc": 2_000_000, "mixer": 20_000_000, "entropy": 1_000_000, "pmi": 2_000_000, "skipping": 2_000_000, "codec": 2_000, "graphann": 50_000, "geofence": 10_000_000, "hll": 20_000_000, "kmvstore": 20_000_000, "driftstore": 10_000_000, "kllstore": 10_000_000, "dsir": 2_000_000, "joinview": 2_000_000, "binaryann": 1_000_000, "unigram": 500_000, "drifttests": 10_000_000, "binning": 10_000_000}
     n = int(args[0]) if args else defaults[which]
     spark = get_spark("scale-probe")
     {"pyramid": probe_pyramid, "dedup": probe_dedup, "knn": probe_knn,
@@ -2858,8 +2791,7 @@ def main() -> None:
      "passages": probe_passages, "semdedup": probe_semdedup,
      "split": probe_split, "incr": probe_incr,
      "chunk": probe_chunk, "stream": probe_stream,
-     "streampart": probe_streampart, "pq": probe_pq,
-     "opq": probe_opq, "cc": probe_cc,
+     "pq": probe_pq, "opq": probe_opq, "cc": probe_cc,
      "streampass": probe_streampass, "bpe": probe_bpe,
      "ivfpq": probe_ivfpq, "ivfpq_opq": probe_ivfpq_opq, "entity": probe_entity, "entity_store": probe_entity_store, "holt": probe_holt, "vocab": probe_vocab, "ann_store": probe_ann_store, "serve": probe_serve, "bpe_drift": probe_bpe_drift, "rowstore": probe_rowstore, "kmeans": probe_kmeans, "acf": probe_acf, "cms": probe_cms, "classifier": probe_classifier, "textindex": probe_textindex, "cusum": probe_cusum, "merge": probe_merge, "bigram": probe_bigram, "span": probe_span, "textindex_inc": probe_textindex_inc, "mixer": probe_mixer, "entropy": probe_entropy, "pmi": probe_pmi, "skipping": probe_skipping, "codec": probe_codec, "graphann": probe_graphann, "geofence": probe_geofence, "hll": probe_hll, "kmvstore": probe_kmvstore, "driftstore": probe_driftstore, "kllstore": probe_kllstore, "dsir": probe_dsir, "joinview": probe_joinview, "binaryann": probe_binaryann, "unigram": probe_unigram, "drifttests": probe_drifttests, "binning": probe_binning}[which](spark, n)
 

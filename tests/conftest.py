@@ -78,7 +78,6 @@ SLOW_TESTS = {
     "tests/test_temporal_property.py::test_episodes_match_python_reference",
     "tests/test_temporal_property.py::test_funnel_matches_python_reference",
     "tests/test_text_index.py::test_incremental_index_equals_oneshot_and_replays",
-    "tests/test_tile_store.py::test_streamed_flat_store_equals_batch_pyramid",
     "tests/test_tiles_property.py::test_parent_shift_equals_center_requantize",
     "tests/test_vocab.py::test_compaction_transparent_to_drift",
     "tests/test_vocab.py::test_drift_log_semantics",
@@ -139,7 +138,6 @@ SLOW_TESTS = {
     "tests/test_oracle.py::test_oracle_match[q_streaming_join]",
     "tests/test_oracle.py::test_oracle_match[q_streaming_tile_retraction]",
     "tests/test_oracle.py::test_oracle_match[q_streaming_tile_store]",
-    "tests/test_oracle.py::test_oracle_match[q_streaming_tile_store_partitioned]",
     "tests/test_oracle.py::test_oracle_match[q_tile_store_serving]",
     "tests/test_oracle.py::test_rows_only_runs[q_bpe_token_counts]",
     "tests/test_oracle.py::test_rows_only_runs[q_knn_graph_recall]",
@@ -165,7 +163,6 @@ SLOW_TESTS = {
     "tests/test_temporal_property.py::test_merge_upsert_matches_python_reference",
     "tests/test_tile_store.py::test_partitioned_store_equals_batch_and_prunes",
     "tests/test_tile_store.py::test_partitioned_store_retraction_and_full_cancellation",
-    "tests/test_tile_store.py::test_partitioned_streaming_face_equals_batch",
     "tests/test_tile_store.py::test_point_resultset_read_matches_batch",
     "tests/test_tile_store.py::test_streamed_store_equals_batch_pyramid",
     "tests/test_tile_store.py::test_vacuum_keeps_latest_versions_readable",

@@ -1,13 +1,8 @@
-"""Z-order clustering: key correctness + real row-group skipping."""
+"""Space-filling-curve keys: Z-order (Morton) and Hilbert correctness."""
 
 import random
 
-from pyspark.sql import functions as F
-
 from heatmap_spark.functions.tiles import z_value
-from heatmap_spark.operators.layout import cluster_by_zorder, row_group_skip_stats
-from heatmap_spark.sources.locations import load_locations
-from heatmap_spark.functions import tiles as tl
 
 
 def _py_z(r: int, c: int, bits: int) -> int:
@@ -31,43 +26,6 @@ def test_z_value_orders_locally(spark):
     for x in out:
         parent_z = _py_z(x.row >> 1, x.col >> 1, 5)
         assert 4 * parent_z <= x.z <= 4 * parent_z + 3
-
-
-def test_zorder_layout_skips_row_groups(spark, sf_correct, tmp_path):
-    """A small bbox must touch far fewer row groups in the z-ordered
-    layout than in the arrival-order layout (footer min/max pruning)."""
-    loc = load_locations(spark, sf_correct).where(F.col("source") != "background")
-    # replicate x24 so each output file holds several 64 KB row groups
-    tiles = loc.select(
-        tl.tile_row("latitude", 14).alias("row"),
-        tl.tile_col("longitude", 14).alias("col"),
-        F.explode(F.sequence(F.lit(0), F.lit(23))).alias("copy"),
-        "user_id",
-    )
-    plain_dir = str(tmp_path / "plain")
-    z_dir = str(tmp_path / "zorder")
-    # small row groups so sf0.01 yields enough groups to measure pruning
-    opts = {"parquet.block.size": str(64 * 1024)}
-    tiles.repartition(4).write.options(**opts).parquet(plain_dir)
-    cluster_by_zorder(tiles, bits=14, num_partitions=4).write.options(**opts).parquet(z_dir)
-
-    # bbox = 1/8 of each axis, centered
-    n = 2**14
-    rr = (3 * n // 8, 4 * n // 8)
-    cc = (3 * n // 8, 4 * n // 8)
-    plain = row_group_skip_stats(plain_dir, row_range=rr, col_range=cc)
-    zed = row_group_skip_stats(z_dir, row_range=rr, col_range=cc)
-    assert plain["row_groups"] > 4, plain
-    assert zed["row_groups"] > 4, zed
-    # arrival order: every group spans the globe -> ~no pruning
-    assert plain["fraction"] > 0.9, plain
-    # z-order: the bbox is clustered -> most groups pruned
-    assert zed["fraction"] < 0.5 * plain["fraction"], (plain, zed)
-
-    # layout change must not change content
-    a = spark.read.parquet(plain_dir).groupBy("row", "col").count()
-    b = spark.read.parquet(z_dir).groupBy("row", "col").count()
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 def test_hilbert_key_matches_reference_and_is_continuous(spark):

@@ -1,24 +1,47 @@
-"""Streaming tile store: multi-batch merge == batch pyramid; replay guard."""
+"""Streaming tile store: multi-batch merge == batch pyramid; replay and
+crash-replay guards; point reads open only their own bucket's marker."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from heatmap_spark.operators.pyramid import build_pyramid
 from heatmap_spark.sources.locations import load_locations
+from heatmap_spark.streaming.logstore import _Fs
 from heatmap_spark.streaming.tile_store import (
-    _read_marker,
-    merge_delta_into_store,
-    read_tile_store,
-    stream_pyramid_to_store,
+    _committed,
+    merge_delta_into_partitioned_store,
+    read_partitioned_store,
+    read_resultset,
+    spatial_bucket,
+    stream_pyramid_to_partitioned_store,
 )
 
 ZOOMS = dict(min_zoom=8, max_zoom=12)
 
 
-def test_streamed_store_equals_batch_pyramid(spark, sf_smoke, tmp_path):
-    """Default (auto) layout: min_zoom=8 >= BUCKET_ZOOM routes to the
-    bucket-PARTITIONED store; read_tile_store reads it transparently."""
-    from heatmap_spark.streaming.tile_store import _live_buckets, _read_bucket_marker
+def _few_bucket_delta(spark, sf_dir, n=3):
+    """The smoke pyramid cut to its first ``n`` spatial buckets — keeps
+    each merge at a few buckets instead of the ~250 the globe spans —
+    checkpointed so the merges and checks below build it once."""
+    delta = build_pyramid(load_locations(spark, sf_dir), mode="explode", **ZOOMS)
+    few = [
+        r.b
+        for r in delta.select(spatial_bucket().alias("b"))
+        .distinct()
+        .orderBy("b")
+        .limit(n)
+        .collect()
+    ]
+    return delta.where(spatial_bucket().isin(few)).localCheckpoint(), few
 
+
+def _same(a, b):
+    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_streamed_store_equals_batch_pyramid(spark, sf_smoke, tmp_path):
+    """The stream driver merges one micro-batch per input file; the
+    store then equals the one-shot batch pyramid."""
     src = str(tmp_path / "in")
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
@@ -30,75 +53,93 @@ def test_streamed_store_equals_batch_pyramid(spark, sf_smoke, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_pyramid_to_store(stream, store, ckpt, **ZOOMS)
+    q = stream_pyramid_to_partitioned_store(stream, store, ckpt, **ZOOMS)
     q.awaitTermination(timeout=300)
 
-    assert _read_marker(store) == (-1, -1), "auto layout must be partitioned"
-    live = _live_buckets(store)
-    assert live, "expected live buckets"
-    assert max(_read_bucket_marker(store, k)[1] for k in live) >= 2, (
+    live = _committed(store)
+    assert live, "expected committed buckets"
+    assert max(batch for _, batch in live.values()) >= 2, (
         "expected one merge per input file"
     )
 
-    got = read_tile_store(spark, store)
+    got = read_partitioned_store(spark, store)
     want = build_pyramid(spark.read.parquet(src), mode="explode", **ZOOMS)
     # visits are sums of 1.0 weights — integer-valued doubles, exact
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    assert _same(got, want)
 
 
-def test_streamed_flat_store_equals_batch_pyramid(spark, sf_smoke, tmp_path):
-    """layout='flat' keeps the whole-store versioned path working."""
-    src = str(tmp_path / "in")
+def test_replayed_batch_is_skipped(spark, sf_smoke, tmp_path, monkeypatch):
+    """A replayed batch is a no-op; a batch that crashed between two
+    buckets' marker swaps re-merges only the buckets it had not
+    committed, and the store then equals a clean two-batch store."""
+    import os
+
     store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    loc = load_locations(spark, sf_smoke)
-    loc.repartition(3).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(loc.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_pyramid_to_store(stream, store, ckpt, layout="flat", **ZOOMS)
-    q.awaitTermination(timeout=300)
-
-    version, last_batch = _read_marker(store)
-    assert last_batch >= 2, "expected one merge per input file"
-    assert version == last_batch
-
-    got = read_tile_store(spark, store)
-    want = build_pyramid(spark.read.parquet(src), mode="explode", **ZOOMS)
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-
-
-def test_replayed_batch_is_skipped(spark, sf_smoke, tmp_path):
-    store = str(tmp_path / "store")
-    delta = build_pyramid(load_locations(spark, sf_smoke), mode="explode", **ZOOMS)
-    assert merge_delta_into_store(spark, delta, store, batch_id=0)
-    v1 = _read_marker(store)
-    total1 = read_tile_store(spark, store).agg(F.sum("visits")).first()[0]
+    delta, few = _few_bucket_delta(spark, sf_smoke)
+    assert len(few) == 3
+    assert merge_delta_into_partitioned_store(spark, delta, store, batch_id=0) == 3
+    v1 = _committed(store)
+    total1 = read_partitioned_store(spark, store).agg(F.sum("visits")).first()[0]
     # crash-replay of the same micro-batch: must be a no-op
-    assert not merge_delta_into_store(spark, delta, store, batch_id=0)
-    assert _read_marker(store) == v1
-    assert read_tile_store(spark, store).agg(F.sum("visits")).first()[0] == total1
-    # the next batch does merge, doubling every tile's count
-    assert merge_delta_into_store(spark, delta, store, batch_id=1)
-    total2 = read_tile_store(spark, store).agg(F.sum("visits")).first()[0]
-    assert total2 == 2 * total1
+    assert merge_delta_into_partitioned_store(spark, delta, store, batch_id=0) == 0
+    assert _committed(store) == v1
+    assert read_partitioned_store(spark, store).agg(F.sum("visits")).first()[0] == total1
+
+    # batch 1 dies on the second bucket's marker swap: the first bucket
+    # is committed, the second's v=1 is an orphan, staging is left over
+    swap = _Fs.write_text_atomic
+    calls = []
+
+    def dies_on_second(self, path, text):
+        calls.append(path)
+        if len(calls) == 2:
+            raise OSError("injected crash before the marker swap")
+        swap(self, path, text)
+
+    monkeypatch.setattr(_Fs, "write_text_atomic", dies_on_second)
+    with pytest.raises(OSError, match="injected crash"):
+        merge_delta_into_partitioned_store(spark, delta, store, batch_id=1)
+    monkeypatch.undo()
+    first, second = few[0], few[1]
+    assert _committed(store) == {first: (1, 1), second: (0, 0), few[2]: (0, 0)}
+    assert os.path.isdir(os.path.join(store, f"bucket={second}", "v=1"))
+    assert os.path.isdir(os.path.join(store, "_staging_1"))
+
+    # the replay commits the two remaining buckets, and every tile's
+    # count is doubled exactly once
+    assert merge_delta_into_partitioned_store(spark, delta, store, batch_id=1) == 2
+    assert _committed(store) == {k: (1, 1) for k in few}
+    got = read_partitioned_store(spark, store)
+    assert got.agg(F.sum("visits")).first()[0] == 2 * total1
+    assert _same(got, delta.withColumn("visits", 2 * F.col("visits")))
+
+
+def test_point_read_opens_only_its_own_marker(spark, sf_smoke, tmp_path, monkeypatch):
+    """read_resultset resolves only the requested bucket's marker: no
+    store listing, at most one exists and one read per bucket."""
+    store = str(tmp_path / "store")
+    delta, _ = _few_bucket_delta(spark, sf_smoke)
+    merge_delta_into_partitioned_store(spark, delta, store, batch_id=0)
+    t = delta.where(F.col("zoom") == 12).orderBy("user_group", "timespan", "row", "col").first()
+    rs_tile_id = f"7_{t.row >> 5}_{t.col >> 5}"
+
+    calls = {"exists": 0, "read_text": 0, "list_names": 0}
+    for name in calls:
+        def counted(self, path, _name=name, _orig=getattr(_Fs, name)):
+            calls[_name] += 1
+            return _orig(self, path)
+
+        monkeypatch.setattr(_Fs, name, counted)
+    df = read_resultset(spark, store, t.user_group, t.timespan, rs_tile_id)
+    monkeypatch.undo()
+    assert calls == {"exists": 1, "read_text": 1, "list_names": 0}, calls
+    assert df.count() == 1
 
 
 def test_partitioned_store_equals_batch_and_prunes(spark, sf_smoke, tmp_path):
     """Partitioned store: multi-batch merge equals the one-shot batch
     pyramid; a localized second batch rewrites ONLY its touched
     buckets; replay is a per-bucket no-op; bucket-list reads prune."""
-    from heatmap_spark.streaming.tile_store import (
-        _live_buckets,
-        _read_bucket_marker,
-        merge_delta_into_partitioned_store,
-        read_partitioned_store,
-        spatial_bucket,
-    )
-
     store = str(tmp_path / "pstore")
     loc = load_locations(spark, sf_smoke)
     # batch 0: everything; batch 1: a localized slice (one small bbox)
@@ -112,14 +153,15 @@ def test_partitioned_store_equals_batch_and_prunes(spark, sf_smoke, tmp_path):
     d1 = build_pyramid(b1, mode="explode", **ZOOMS)
 
     assert merge_delta_into_partitioned_store(spark, d0, store, batch_id=0) > 0
-    markers_before = {k: _read_bucket_marker(store, k) for k in _live_buckets(store)}
+    markers_before = _committed(store)
     touched1 = {r.b for r in d1.select(spatial_bucket().alias("b")).distinct().collect()}
     assert 0 < len(touched1) < len(markers_before), "batch 1 must be localized"
 
     n1 = merge_delta_into_partitioned_store(spark, d1, store, batch_id=1)
     assert n1 == len(touched1)
+    markers_after = _committed(store)
     for k, before in markers_before.items():
-        after = _read_bucket_marker(store, k)
+        after = markers_after[k]
         if k in touched1:
             assert after == (before[0] + 1, 1)
         else:
@@ -142,42 +184,13 @@ def test_partitioned_store_equals_batch_and_prunes(spark, sf_smoke, tmp_path):
     ]
 
 
-def test_partitioned_streaming_face_equals_batch(spark, sf_smoke, tmp_path):
-    from heatmap_spark.streaming.tile_store import (
-        read_partitioned_store,
-        stream_pyramid_to_partitioned_store,
-    )
-
-    src = str(tmp_path / "in")
-    store = str(tmp_path / "pstore")
-    ckpt = str(tmp_path / "ckpt")
-    loc = load_locations(spark, sf_smoke)
-    loc.repartition(3).write.parquet(src)
-    stream = (
-        spark.readStream.schema(loc.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_pyramid_to_partitioned_store(stream, store, ckpt, **ZOOMS)
-    q.awaitTermination(timeout=300)
-    got = read_partitioned_store(spark, store)
-    want = build_pyramid(spark.read.parquet(src), mode="explode", **ZOOMS)
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
-
-
 def test_vacuum_keeps_latest_versions_readable(spark, sf_smoke, tmp_path):
     """After several merges, vacuum removes superseded version dirs and
     orphaned staging, keeps the latest per bucket, and reads are
     unchanged."""
     import os
 
-    from heatmap_spark.streaming.tile_store import (
-        _live_buckets,
-        _read_bucket_marker,
-        merge_delta_into_partitioned_store,
-        read_partitioned_store,
-        vacuum_partitioned_store,
-    )
+    from heatmap_spark.streaming.tile_store import vacuum_partitioned_store
 
     store = str(tmp_path / "pstore")
     delta = build_pyramid(load_locations(spark, sf_smoke), mode="explode", **ZOOMS)
@@ -194,8 +207,7 @@ def test_vacuum_keeps_latest_versions_readable(spark, sf_smoke, tmp_path):
     removed = vacuum_partitioned_store(store, keep=1, staging_age_s=0)
     assert removed > 0
     assert not os.path.exists(os.path.join(store, "_staging_99"))
-    for k in _live_buckets(store):
-        latest, _ = _read_bucket_marker(store, k)
+    for k, (latest, _) in _committed(store).items():
         vdirs = [d for d in os.listdir(os.path.join(store, f"bucket={k}")) if d.startswith("v=")]
         assert vdirs == [f"v={latest}"]
     after = read_partitioned_store(spark, store).agg(F.sum("visits")).first()[0]
@@ -234,10 +246,6 @@ def test_point_resultset_read_matches_batch(spark, sf_smoke, tmp_path):
     from the partitioned store equals the batch resultsets row; the
     scan opens only the parent's coarse cell(s)."""
     from heatmap_spark.operators.pyramid import resultsets
-    from heatmap_spark.streaming.tile_store import (
-        merge_delta_into_partitioned_store,
-        read_resultset,
-    )
 
     store = str(tmp_path / "pstore")
     pyr = build_pyramid(load_locations(spark, sf_smoke), mode="explode", **ZOOMS)
@@ -283,11 +291,6 @@ def test_partitioned_store_retraction_and_full_cancellation(spark, sf_smoke, tmp
     from pyspark.sql import functions as F
 
     from heatmap_spark.operators import pyramid as P
-    from heatmap_spark.sources.locations import load_locations
-    from heatmap_spark.streaming.tile_store import (
-        merge_delta_into_partitioned_store,
-        read_partitioned_store,
-    )
 
     loc = load_locations(spark, sf_smoke)
     store = str(tmp_path / "s")
