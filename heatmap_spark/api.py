@@ -17,8 +17,6 @@ from heatmap_spark.functions.timespans import DEFAULT_TIMESPANS
 from heatmap_spark.operators import pyramid as _pyr
 from heatmap_spark.sources.locations import load_locations
 
-LOCATIONS_SCHEMA = "latitude double, longitude double, ts timestamp, user_id string, source string, weight double"
-
 
 class Heatmap:
     """Entry point bound to a SparkSession."""

@@ -16,43 +16,29 @@ per-(window, tile), not per-event.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from heatmap_spark.operators.pyramid import user_groups_expr
 from heatmap_spark.functions.tiles import tile_col, tile_id_from_zrc, tile_row
+from heatmap_spark.sources.tables import events_schema, normalize_events
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (one-file directory
     stream; production would be Kafka — same downstream code).
 
-    The fixture's ``ts`` column has been generated both as
-    TIMESTAMP(NANOS) (read as long under nanosAsLong) and as plain
-    micros across driver versions; infer the batch schema once and
-    normalize so downstream code always sees TimestampType micros.
+    The read schema and the nanos→micros normalisation are the batch
+    loader's (:func:`heatmap_spark.sources.tables.events_schema`,
+    decided from the parquet footer, no Spark job), so downstream code
+    always sees TimestampType micros.
     """
-    import os
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    raw = (
+    schema = events_schema(spark, os.path.join(sf_dir, "events.parquet"))
+    return normalize_events(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
-    )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Watermarks require TIMESTAMP (LTZ); session is pinned UTC so the
-    # NTZ→LTZ cast is value-preserving.
-    return raw.select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
     )
 
 

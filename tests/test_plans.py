@@ -778,3 +778,25 @@ def test_binning_histogram_emit_broadcasts_bounds(spark, sf_smoke, tmp_path):
     binned = _histogram_rows(labeled, bnd, 0)
     assert has_broadcast_join(binned), plan_string(binned, "simple")
     assert not has_python_eval(binned)
+
+
+def test_headline_queries_build_without_spark_jobs(spark, sf_smoke):
+    """Job budget of the build phase: constructing a headline query's
+    DataFrame launches no Spark job (the fixture tables are read with
+    declared schemas, so there is no schema-inference job).  The one
+    exception is the cascade pyramid, whose eager per-level checkpoints
+    run during build; they are pinned at their count."""
+    from heatmap_spark.queries import headline_queries
+
+    budget = {"q_heatmap_pyramid_cascade": 6}
+
+    def max_job_id():
+        ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+        return max(ids, default=-1)
+
+    jobs = {}
+    for name, fn in headline_queries().items():
+        j0 = max_job_id()
+        fn(spark, sf_smoke)
+        jobs[name] = max_job_id() - j0
+    assert jobs == {name: budget.get(name, 0) for name in jobs}, jobs

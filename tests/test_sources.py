@@ -1,9 +1,64 @@
-"""Python DataSource + Kafka connector gating (sources/)."""
+"""Fixture table loading, Python DataSource and Kafka connector gating
+(sources/)."""
 
 import pytest
 
 from heatmap_spark.sources.connectors import ConnectorUnavailable, read_kafka_stream
 from heatmap_spark.sources.pydatasource import register
+
+
+@pytest.mark.parametrize("sf", ["sf_smoke", "sf_correct"])
+def test_declared_schemas_equal_inferred(spark, sf, request):
+    """Each declared fixture schema equals what parquet inference
+    returns.  A declared schema reads a column missing from the file as
+    nulls, so without this pin a fixture change would not fail."""
+    import os
+
+    from heatmap_spark.sources.tables import SCHEMAS, TABLES, events_schema
+
+    sf_dir = request.getfixturevalue(sf)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    assert len(TABLES) == 10
+    for name in TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        declared = events_schema(spark, path) if name == "events" else SCHEMAS[name]
+        got = spark.read.schema(declared).parquet(path).schema
+        assert got == spark.read.parquet(path).schema, name
+
+
+def test_nanos_events_load_like_their_micros_twin(spark, sf_smoke, tmp_path):
+    """An events file storing TIMESTAMP(NANOS) loads through load_table
+    to the same rows as its TIMESTAMP(MICROS) twin: nanos are truncated
+    to micros, as DuckDB reads them.  So does a Spark-written events
+    directory, whose footer stores ``ts`` as UTC-adjusted INT96."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from heatmap_spark.sources.tables import load_table
+
+    ev = pq.read_table(f"{sf_smoke}/events.parquet")
+    us = ev.column("ts").cast(pa.timestamp("us"))
+    # 789 ns below the next microsecond: truncation, not rounding
+    ns = pa.array(
+        us.cast(pa.int64()).to_numpy() * 1000 + np.int64(789), pa.timestamp("ns")
+    )
+    i = ev.schema.get_field_index("ts")
+    for unit, ts in (("us", us), ("ns", ns)):
+        (tmp_path / unit).mkdir()
+        pq.write_table(ev.set_column(i, "ts", ts), str(tmp_path / unit / "events.parquet"))
+    stored = pq.read_schema(str(tmp_path / "ns" / "events.parquet")).field("ts").type
+    assert stored == pa.timestamp("ns")
+
+    micros = load_table(spark, str(tmp_path / "us"), "events")
+    nanos = load_table(spark, str(tmp_path / "ns"), "events")
+    micros.write.parquet(str(tmp_path / "spark" / "events.parquet"))
+    spark_dir = load_table(spark, str(tmp_path / "spark"), "events")
+    want = sorted(micros.collect())
+    assert len(want) == ev.num_rows
+    for got in (nanos, spark_dir):
+        assert got.schema == micros.schema
+        assert sorted(got.collect()) == want
 
 
 def test_synthetic_locations_datasource(spark):

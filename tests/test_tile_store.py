@@ -1,5 +1,6 @@
 """Streaming tile store: multi-batch merge == batch pyramid; replay and
-crash-replay guards; point reads open only their own bucket's marker."""
+crash-replay guards; point reads open only their own bucket's marker and
+run one Spark job."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,6 +9,7 @@ from heatmap_spark.operators.pyramid import build_pyramid
 from heatmap_spark.sources.locations import load_locations
 from heatmap_spark.streaming.logstore import _Fs
 from heatmap_spark.streaming.tile_store import (
+    BUCKET_ZOOM,
     _committed,
     merge_delta_into_partitioned_store,
     read_partitioned_store,
@@ -134,6 +136,27 @@ def test_point_read_opens_only_its_own_marker(spark, sf_smoke, tmp_path, monkeyp
     monkeypatch.undo()
     assert calls == {"exists": 1, "read_text": 1, "list_names": 0}, calls
     assert df.count() == 1
+
+
+def test_point_read_is_one_spark_job(spark, sf_smoke, tmp_path):
+    """A point read at z >= BUCKET_ZOOM runs exactly one Spark job: the
+    store schema is declared (no inference job) and the one result-set
+    key is packaged without an exchange.  Jobs are counted as the delta
+    of the highest started job id."""
+    store = str(tmp_path / "store")
+    delta, _ = _few_bucket_delta(spark, sf_smoke)
+    merge_delta_into_partitioned_store(spark, delta, store, batch_id=0)
+    t = delta.where(F.col("zoom") == 12).orderBy("user_group", "timespan", "row", "col").first()
+    rs_tile_id = f"7_{t.row >> 5}_{t.col >> 5}"
+    assert 7 >= BUCKET_ZOOM
+
+    def max_job_id():
+        return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    j0 = max_job_id()
+    rows = read_resultset(spark, store, t.user_group, t.timespan, rs_tile_id).collect()
+    assert max_job_id() - j0 == 1
+    assert len(rows) == 1 and rows[0].rs_tile_id == rs_tile_id
 
 
 def test_partitioned_store_equals_batch_and_prunes(spark, sf_smoke, tmp_path):
